@@ -9,7 +9,11 @@ this is that second tier, built on the byte-level decoder
 (cdc/binlog.py). ``spark.readStream.format("galaxy_binlog")``
 yields one row per row-change with positional ``org_row`` images;
 schema attach (P1) and projections (P2-P4) then run as the same
-column algebra as every other source tier.
+column algebra as every other source tier. ``read`` hands Spark
+those rows as Arrow record batches (``ARROW_SCHEMA``, at most
+``MAX_BATCH_ROWS`` rows each), filled column-wise one decoded event
+at a time, so no per-row, per-value conversion runs between the
+decoder and the JVM.
 
 Offset model (mirrors the reference's ``(file, pos)`` position,
 ``pkg/shared.go:13-14``, EXTENDED with the failover currency the
@@ -40,11 +44,18 @@ the reference's recovery semantics (``Continue()`` drops
 already-applied positions, ``concurrently_task_manager.go:97-120``).
 Cost: each micro-batch re-scans its segment's prefix; segments are
 bounded (max_binlog_size), so this is O(segment), not O(history).
+Beyond the decode, a row costs its share of one columnar Arrow
+build; Spark's Python worker forwards the batches as they are. A CDC
+task reads each segment ONCE per micro-batch: good and dead-letter
+messages come out of one projection over one scan
+(``streaming/pipeline.py:task_messages``).
 
 Parallelism: one InputPartition per segment — decode is inherently
 sequential WITHIN a segment (TABLE_MAP state), but segments decode
 in parallel across executors, which is the unit Kafka gives you
-too (partition-ordered, not globally ordered).
+too (partition-ordered, not globally ordered). A segment's rows
+leave its partition as ``MAX_BATCH_ROWS``-row slices of one
+record batch.
 
 ``startingOffsets=latest`` (S2 parity, ``baseinfo.go:254-262``):
 the initial offset probes the directory's current end instead of
@@ -74,7 +85,9 @@ from __future__ import annotations
 
 import os
 from collections.abc import Iterator, Sequence
+from itertools import repeat
 
+import pyarrow as pa
 from pyspark.sql.datasource import (DataSource, DataSourceStreamReader,
                                     InputPartition)
 from pyspark.sql.types import StructType
@@ -87,6 +100,23 @@ SCHEMA = ("database string, `table` string, action string, "
 #: evolution path (S3 routes QueryEvent -> P5, sync.go:168-174)
 DDL_SCHEMA = ("database string, query string, ts_sec bigint, "
               "log_pos bigint, binlog_file string")
+
+#: the Arrow twins of ``SCHEMA`` / ``DDL_SCHEMA``: ``read`` hands
+#: Spark record batches of exactly these fields
+ARROW_SCHEMA = pa.schema([
+    ("database", pa.string()), ("table", pa.string()),
+    ("action", pa.string()),
+    ("org_row", pa.list_(pa.list_(pa.string()))),
+    ("ts_sec", pa.int64()), ("log_pos", pa.int64()),
+    ("binlog_file", pa.string())])
+DDL_ARROW_SCHEMA = pa.schema([
+    ("database", pa.string()), ("query", pa.string()),
+    ("ts_sec", pa.int64()), ("log_pos", pa.int64()),
+    ("binlog_file", pa.string())])
+
+#: rows per record batch ``read`` yields — Spark's default
+#: ``spark.sql.execution.arrow.maxRecordsPerBatch``
+MAX_BATCH_ROWS = 10_000
 
 
 def _seg_key(name: str) -> tuple:
@@ -932,23 +962,52 @@ class BinlogStreamReader(DataSourceStreamReader):
                                          end_pos))
         return out
 
-    def read(self, partition: _SegmentSlice) -> Iterator[tuple]:
+    def read(self, partition: _SegmentSlice) \
+            -> Iterator[pa.RecordBatch]:
+        """Decode the segment up to ``end_pos`` and yield its changes
+        past ``start_pos`` as Arrow batches of at most
+        ``MAX_BATCH_ROWS`` rows, whose fields are ``SCHEMA`` (or
+        ``DDL_SCHEMA`` for ``include="ddl"``). Columns fill one whole
+        event at a time: database, table, action, ts and log_pos are
+        constant across a rows event's row images."""
         from galaxy_spark.cdc.binlog import decode_binlog
 
         with open(os.path.join(partition.path, partition.fname),
                   "rb") as f:
             blob = f.read(partition.end_pos)
+        if self.include == "ddl":
+            schema = DDL_ARROW_SCHEMA
+            database, query, ts, log_pos = cols = [[], [], [], []]
+        else:
+            schema = ARROW_SCHEMA
+            database, table, action, org_row, ts, log_pos = cols = [
+                [], [], [], [], [], []]
         for ev in decode_binlog(blob):
             if ev.log_pos <= partition.start_pos:
                 continue            # replay-skip (C1 Continue())
             if self.include == "ddl":
                 if ev.kind == "query" and ev.query != "BEGIN":
-                    yield (ev.database, ev.query, ev.timestamp,
-                           ev.log_pos, partition.fname)
+                    database.append(ev.database)
+                    query.append(ev.query)
+                    ts.append(ev.timestamp)
+                    log_pos.append(ev.log_pos)
             elif ev.kind in ("insert", "update", "delete"):
-                for row in ev.rows:
-                    yield (ev.database, ev.table, ev.kind, row,
-                           ev.timestamp, ev.log_pos, partition.fname)
+                n = len(ev.rows)
+                database.extend(repeat(ev.database, n))
+                table.extend(repeat(ev.table, n))
+                action.extend(repeat(ev.kind, n))
+                org_row.extend(ev.rows)
+                ts.extend(repeat(ev.timestamp, n))
+                log_pos.extend(repeat(ev.log_pos, n))
+        n_rows = len(ts)
+        if not n_rows:
+            return
+        cols.append([partition.fname] * n_rows)
+        batch = pa.RecordBatch.from_arrays(
+            [pa.array(col, type=f.type) for col, f in zip(cols, schema)],
+            schema=schema)
+        for off in range(0, n_rows, MAX_BATCH_ROWS):
+            yield batch.slice(off, MAX_BATCH_ROWS)
 
     def commit(self, end: dict) -> None:
         pass                        # checkpoint log owns durability

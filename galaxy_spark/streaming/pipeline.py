@@ -29,7 +29,7 @@ from __future__ import annotations
 from collections.abc import Sequence
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
@@ -87,17 +87,35 @@ def transform_envelope(env: DataFrame, task_filter: TaskFilter,
     return project_changes(filtered, columns)
 
 
+def _routed(df: DataFrame, task_id: str) -> tuple[Column, Column]:
+    """(topic, value) of a routed change message over ``df``."""
+    body = [c for c in ("database", "table", "action", "before", "after",
+                        "org_row", "event_header") if c in df.columns]
+    return (F.concat_ws(".", F.lit(task_id), "database", "table"),
+            F.to_json(F.struct(*body)))
+
+
+def _dead_letter(df: DataFrame, task_id: str) -> tuple[Column, Column]:
+    """(topic, value) of a dead-letter message over ``df``."""
+    body = [c for c in ("database", "table", "action", "org_row",
+                        "event_header") if c in df.columns]
+    return (F.concat_ws(".", F.lit(task_id), F.lit("deadletter"),
+                        "database", "table"),
+            F.to_json(F.struct(*body)))
+
+
+def _select_messages(df: DataFrame, topic: Column,
+                     value: Column) -> DataFrame:
+    """Message frame: both topics key by ``<db>.<table>``."""
+    return df.select(topic.alias("topic"),
+                     F.concat_ws(".", "database", "table").alias("key"),
+                     value.alias("value"))
+
+
 def routed_messages(events: DataFrame, task_id: str) -> DataFrame:
     """K1: one JSON message per change, with topic/key routing
     columns understood natively by the Kafka sink."""
-    body = [c for c in ("database", "table", "action", "before", "after",
-                        "org_row", "event_header") if c in events.columns]
-    payload = F.to_json(F.struct(*body))
-    return events.select(
-        F.concat_ws(".", F.lit(task_id), "database", "table").alias("topic"),
-        F.concat_ws(".", "database", "table").alias("key"),
-        payload.alias("value"),
-    )
+    return _select_messages(events, *_routed(events, task_id))
 
 
 def dead_letter_messages(projected: DataFrame, task_id: str) -> DataFrame:
@@ -105,17 +123,31 @@ def dead_letter_messages(projected: DataFrame, task_id: str) -> DataFrame:
     ``<task>.deadletter.<db>.<table>`` carrying the FULL raw event
     (org_row, header, action) so nothing is lost and the malformed
     payload is replayable after a fix — the standard Kafka
-    dead-letter-queue pattern, one stream and one sink (the DLQ is
-    just more topic routing, not a second query)."""
+    dead-letter-queue pattern, one stream, one scan and one sink
+    (the DLQ is just more topic routing, not a second query; the
+    pipeline routes both topics in ONE projection, ``task_messages``,
+    so the source is read once per micro-batch)."""
     bad = projected.filter(F.col("quarantined"))
-    body = [c for c in ("database", "table", "action", "org_row",
-                        "event_header") if c in bad.columns]
-    return bad.select(
-        F.concat_ws(".", F.lit(task_id), F.lit("deadletter"),
-                    "database", "table").alias("topic"),
-        F.concat_ws(".", "database", "table").alias("key"),
-        F.to_json(F.struct(*body)).alias("value"),
-    )
+    return _select_messages(bad, *_dead_letter(bad, task_id))
+
+
+def task_messages(projected: DataFrame, task_id: str,
+                  dead_letter: bool = True) -> DataFrame:
+    """Every message of a projected frame in ONE projection: the
+    rows of ``routed_messages`` over its unquarantined rows plus
+    (``dead_letter=True``) those of ``dead_letter_messages``, picked
+    per row by the ``quarantined`` flag — the same multiset as their
+    union without the union's second scan of the source. A row whose
+    flag is NULL reaches neither topic, as it reaches neither
+    branch's filter."""
+    q = F.col("quarantined")
+    if not dead_letter:
+        return routed_messages(projected.filter(~q), task_id)
+    topic, value = _routed(projected, task_id)
+    dl_topic, dl_value = _dead_letter(projected, task_id)
+    return _select_messages(projected.filter(q.isNotNull()),
+                            F.when(q, dl_topic).otherwise(topic),
+                            F.when(q, dl_value).otherwise(value))
 
 
 def start_pipeline(env_stream: DataFrame, task_id: str,
@@ -131,16 +163,14 @@ def start_pipeline(env_stream: DataFrame, task_id: str,
     ``dead_letter=True`` (default): rows the projection quarantines
     (arity mismatch, malformed image — projections.py) are NOT
     silently dropped; they route to the task's
-    ``<task>.deadletter.<db>.<table>`` topic through the SAME sink.
+    ``<task>.deadletter.<db>.<table>`` topic through the SAME sink
+    and the same scan (``task_messages``).
     At 100 TB a poison row must neither abort hours of progress
     (the quarantine flag's job) nor vanish without trace (this
     routing's job — the reference errors the whole event instead,
     process.go:120-122; divergence documented in README)."""
     projected = transform_envelope(env_stream, task_filter, columns)
-    good = projected.filter(~F.col("quarantined"))
-    msgs = routed_messages(good, task_id)
-    if dead_letter:
-        msgs = msgs.unionByName(dead_letter_messages(projected, task_id))
+    msgs = task_messages(projected, task_id, dead_letter)
     writer = msgs.writeStream.outputMode("append") \
         .option("checkpointLocation", checkpoint_dir)
     writer = sink.apply(writer, query_name=task_id)
@@ -220,14 +250,12 @@ def start_pipeline_live(env_stream: DataFrame, task_id: str,
     def handle(batch_df: DataFrame, epoch_id: int) -> None:
         projected = transform_envelope(batch_df, live_filter.get(),
                                        columns)
-        good = projected.filter(~F.col("quarantined"))
         # same DLQ contract as start_pipeline: quarantined rows
         # route to <task>.deadletter.<db>.<table> through the SAME
         # sink — the live variant used to drop them on the floor,
         # losing malformed payloads exactly on the pipeline meant
         # for production filter updates
-        msgs = routed_messages(good, task_id).unionByName(
-            dead_letter_messages(projected, task_id))
+        msgs = task_messages(projected, task_id)
         if sink.kind == "kafka":
             msgs.write.format("kafka").options(**sink.options).save()
         elif sink.kind == "memory":

@@ -12,6 +12,8 @@ import struct
 
 import pytest
 
+from tests.source_rows import read_rows
+
 FIXTURE = os.path.join(os.path.dirname(__file__), "fixtures",
                        "binlog_v4_sample.bin")
 
@@ -370,6 +372,139 @@ def test_reference_shape_pipeline_end_to_end(spark, binlog_dir,
     # hand-derived truth of segment 1: id 1 inserted then deleted
     # (tombstone), id 2 inserted@299 then updated@390 -> 21.0
     assert store.snapshot() == [("shop", "orders", 2, 21.0, 390, 2)]
+
+
+def test_pipeline_scans_source_once_per_batch(spark, binlog_dir,
+                                             tmp_path):
+    """Routed and dead-letter messages come from ONE scan of the
+    binlog source: the executed micro-batch plan holds a single
+    ``MicroBatchScan`` and no ``Union`` (a union of the two topics'
+    frames decoded every segment twice), while both topics still
+    receive every row-change."""
+    import glob
+    from types import SimpleNamespace
+
+    from galaxy_spark.cdc.filters import TaskFilter
+    from galaxy_spark.sinks_topic import TopicFilesDataSource
+    from galaxy_spark.sources.binlog_source import binlog_envelope_factory
+    from galaxy_spark.streaming.pipeline import SinkConfig, start_pipeline
+
+    try:
+        spark.dataSource.register(TopicFilesDataSource)
+    except Exception:
+        pass
+    # shop.payments has 13 columns against the attached 4: every row
+    # of this segment quarantines
+    shutil.copy(os.path.join(os.path.dirname(__file__), "fixtures",
+                             "binlog_v4_rich.bin"),
+                os.path.join(binlog_dir, "binlog.000002.bin"))
+    topics = str(tmp_path / "topics")
+    env = binlog_envelope_factory(binlog_dir)(
+        spark, SimpleNamespace(checkpoint_epoch=0))
+    q = start_pipeline(env, "t_one", TaskFilter(databases=("shop",)),
+                       ["id", "qty", "amount", "note"],
+                       SinkConfig("topic_files", {"path": topics}),
+                       str(tmp_path / "ck"))
+    try:
+        q.processAllAvailable()
+        plan = (q._jsq.streamingQuery().lastExecution().executedPlan()
+                .toString())
+    finally:
+        q.stop()
+    assert plan.count("MicroBatchScan") == 1, plan
+    assert "Union" not in plan, plan
+
+    def lines(topic):
+        n = 0
+        for f in glob.glob(f"{topics}/{topic}/batch-*.jsonl"):
+            with open(f) as fh:
+                n += sum(1 for _ in fh)
+        return n
+
+    assert sorted(os.listdir(topics)) == [
+        "t_one.deadletter.shop.payments", "t_one.shop.orders"]
+    assert lines("t_one.shop.orders") == 4
+    assert lines("t_one.deadletter.shop.payments") == 4
+
+
+def _flatten_decode(blob: bytes, fname: str, include: str,
+                    start_pos: int = 0) -> list[tuple]:
+    """Reference for ``read``: one tuple per row-change (or DDL
+    query) straight from ``decode_binlog``, past ``start_pos``."""
+    from galaxy_spark.cdc.binlog import decode_binlog
+
+    out = []
+    for ev in decode_binlog(blob):
+        if ev.log_pos <= start_pos:
+            continue
+        if include == "ddl":
+            if ev.kind == "query" and ev.query != "BEGIN":
+                out.append((ev.database, ev.query, ev.timestamp,
+                            ev.log_pos, fname))
+        elif ev.kind in ("insert", "update", "delete"):
+            out.extend((ev.database, ev.table, ev.kind, row,
+                        ev.timestamp, ev.log_pos, fname)
+                       for row in ev.rows)
+    return out
+
+
+@pytest.mark.parametrize("include", ["rows", "ddl"])
+@pytest.mark.parametrize("fixture", ["binlog_v4_sample.bin",
+                                     "binlog_v4_rich.bin"])
+def test_read_yields_arrow_batches_equal_to_decode(spark, fixture,
+                                                   include):
+    """``read`` hands Spark Arrow record batches whose fields are
+    the declared schema and whose rows are exactly the decoder's
+    row-changes (or DDL queries), in order."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    from galaxy_spark.sources.binlog_source import (DDL_SCHEMA, SCHEMA,
+                                                    _SegmentSlice)
+
+    d = os.path.join(os.path.dirname(__file__), "fixtures")
+    with open(os.path.join(d, fixture), "rb") as f:
+        blob = f.read()
+    rd = _mk_reader(d, include=include)
+    part = _SegmentSlice(d, fixture, 0, len(blob))
+    batches = list(rd.read(part))
+    want = to_arrow_schema(StructType.fromDDL(
+        DDL_SCHEMA if include == "ddl" else SCHEMA))
+    assert batches
+    for b in batches:
+        assert b.schema.names == want.names
+        assert b.schema.types == want.types
+    ref = _flatten_decode(blob, fixture, include)
+    assert ref and read_rows(rd, part) == ref
+
+
+def test_read_replay_skip_empty_range_and_batch_cap(monkeypatch):
+    """A mid-segment start yields only the events past it, an empty
+    range yields no batch at all, and no batch exceeds the row
+    cap."""
+    from galaxy_spark.cdc.binlog import decode_binlog
+    from galaxy_spark.sources import binlog_source
+    from galaxy_spark.sources.binlog_source import _SegmentSlice
+
+    d, fname = os.path.dirname(FIXTURE), os.path.basename(FIXTURE)
+    with open(FIXTURE, "rb") as f:
+        blob = f.read()
+    rd = _mk_reader(d)
+    rows_pos = [ev.log_pos for ev in decode_binlog(blob)
+                if ev.kind in ("insert", "update", "delete")]
+    mid = rows_pos[len(rows_pos) // 2 - 1]
+    got = read_rows(rd, _SegmentSlice(d, fname, mid, len(blob)))
+    assert got == _flatten_decode(blob, fname, "rows", start_pos=mid)
+    assert 0 < len(got) < len(_flatten_decode(blob, fname, "rows"))
+
+    assert list(rd.read(_SegmentSlice(d, fname, len(blob),
+                                      len(blob)))) == []
+
+    monkeypatch.setattr(binlog_source, "MAX_BATCH_ROWS", 3)
+    full = _SegmentSlice(d, fname, 0, len(blob))
+    sizes = [b.num_rows for b in rd.read(full)]
+    assert sizes == [3, 1]
+    assert read_rows(rd, full) == _flatten_decode(blob, fname, "rows")
 
 
 def test_checkpoint_restart_resumes_from_saved_offset(spark, binlog_dir,
@@ -1209,7 +1344,7 @@ def test_live_failover_releases_monotonic_floor(tmp_path):
     parts = rd.partitions(committed, new_end)
     vals = []
     for p in parts:
-        for row in rd.read(p):
+        for row in read_rows(rd, p):
             vals.append(int(row[3][0][0]))
     assert vals == [4], "no duplicate, no gap across live failover"
 
@@ -1291,7 +1426,7 @@ def test_previous_gtids_seed_into_carried_sets(tmp_path):
         f.write(seg([11, 12, 13]))
     rd2 = _mk_reader(d)
     parts = rd2.partitions(committed, rd2._end_of_dir())
-    vals = [int(row[3][0][0]) for p in parts for row in rd2.read(p)]
+    vals = [int(row[3][0][0]) for p in parts for row in read_rows(rd2, p)]
     assert vals == [13]
     assert off["file"] == "old-primary.000005.bin"
 
@@ -1588,7 +1723,7 @@ def test_fingerprint_gate_catches_anonymous_same_name_rebuild(
         f.write(tail[len(seg(100, 7, [1, 2])):])
     rd3 = _mk_reader(d)
     parts = rd3.partitions(committed, rd3._end_of_dir())
-    vals = [int(row[3][0][0]) for p in parts for row in rd3.read(p)]
+    vals = [int(row[3][0][0]) for p in parts for row in read_rows(rd3, p)]
     assert vals == [3]
 
 
@@ -1670,7 +1805,7 @@ def test_fingerprint_skips_virgin_segment_and_fde_rewrite(tmp_path):
         f.write(w2.bytes())
     rd2 = _mk_reader(d)
     parts = rd2.partitions(committed, rd2._end_of_dir())
-    vals = [int(row[3][0][0]) for p in parts for row in rd2.read(p)]
+    vals = [int(row[3][0][0]) for p in parts for row in read_rows(rd2, p)]
     assert vals == [1], "gate must not fire across the FDE rewrite"
 
 
@@ -1743,7 +1878,7 @@ def test_fingerprint_version_mismatch_skips_not_flags(tmp_path):
     rd2 = _mk_reader(d)
     parts = rd2.partitions(
         {**committed, "pos": 4}, rd2._end_of_dir())
-    vals = [int(row[3][0][0]) for p in parts for row in rd2.read(p)]
+    vals = [int(row[3][0][0]) for p in parts for row in read_rows(rd2, p)]
     assert vals == [1], "version mismatch must skip, not flag"
 
 

@@ -19,6 +19,7 @@ import pytest
 from galaxy_spark.cdc import replication_client as rc
 from galaxy_spark.cdc.binlog import decode_binlog
 from tests.fixtures.binlog_wire_encoder import LONG, VARCHAR, BinlogWriter
+from tests.source_rows import read_rows
 
 COLS = [(LONG, 0), (VARCHAR, 64)]
 
@@ -408,7 +409,7 @@ def test_source_mariadb_carried_offsets_relocate_on_failover(
     assert start["file"] == "failover-bin.000001.bin"
     new_end = rd2._end_of_dir()
     parts = rd2.partitions(start, new_end)
-    vals = [int(row[3][0][0]) for p in parts for row in rd2.read(p)]
+    vals = [int(row[3][0][0]) for p in parts for row in read_rows(rd2, p)]
     assert vals == [5], "exactly the new transaction, no replay"
 
 

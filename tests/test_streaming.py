@@ -22,8 +22,10 @@ from galaxy_spark.control.tasks import TaskManager, TaskSpec
 from galaxy_spark.streaming import windows as W
 from galaxy_spark.streaming.pipeline import (
     SinkConfig,
+    dead_letter_messages,
     ddl_apply_batch,
     routed_messages,
+    task_messages,
 )
 from galaxy_spark.tables import load_table
 
@@ -209,6 +211,69 @@ def test_ddl_foreach_batch_applies_to_registry(spark):
         "database string, query string")
     handler(batch, epoch_id=0)
     assert reg.column_names("db0", "click") == ["event_id", "user_id"]
+
+
+def test_task_messages_equal_routed_union_dead_letter(spark):
+    """The pipeline's one-projection routing publishes exactly the
+    multiset of (topic, key, value) that the union of
+    ``routed_messages`` over the good rows and ``dead_letter_messages``
+    gives: good inserts/updates/deletes, arity-mismatched rows, a
+    one-image update, a NULL ``org_row`` and a table the registry
+    lacks. Without the dead-letter queue it is exactly the routed
+    messages, and a row whose quarantine flag is NULL reaches
+    neither topic."""
+    from collections import Counter
+
+    from galaxy_spark.cdc.projections import project_changes_by_schema
+    from galaxy_spark.cdc.schema_registry import (ColumnDef,
+                                                  SchemaRegistry,
+                                                  registry_frame)
+
+    reg = SchemaRegistry()
+    reg.put("shop", "orders",
+            [ColumnDef("id", "bigint", False),
+             ColumnDef("qty", "int", False),
+             ColumnDef("note", "varchar(40)", True)])
+    img, img2 = ["1", "2", "a"], ["1", "3", None]
+    rows = [
+        ("insert", "orders", [img]),
+        ("update", "orders", [img, img2]),
+        ("delete", "orders", [img2]),
+        ("insert", "orders", [["1", "2"]]),         # arity
+        ("update", "orders", [img]),                # one image
+        ("insert", "orders", None),                 # NULL org_row
+        ("insert", "ghosts", [["9"]]),              # not registered
+    ]
+    env = spark.createDataFrame(
+        [("shop", t, a, r, (100 + i, 200 + i))
+         for i, (a, t, r) in enumerate(rows)],
+        "database string, `table` string, action string, "
+        "org_row array<array<string>>, "
+        "event_header struct<timestamp:bigint,log_pos:bigint>")
+    projected = project_changes_by_schema(env,
+                                          registry_frame(spark, reg))
+
+    def msgs(df):
+        return Counter((r.topic, r.key, r.value) for r in df.collect())
+
+    good = routed_messages(projected.filter(~F.col("quarantined")), "t")
+    want = msgs(good) + msgs(dead_letter_messages(projected, "t"))
+    assert msgs(task_messages(projected, "t")) == want
+    assert sum(want.values()) == len(rows)
+    assert sum(n for (topic, _k, _v), n in want.items()
+               if topic.startswith("t.deadletter.")) == 4
+    assert msgs(task_messages(projected, "t", dead_letter=False)) == \
+        msgs(good)
+
+    unflagged = projected.withColumn(
+        "quarantined",
+        F.when(F.col("table") != "ghosts", F.col("quarantined")))
+    fused = msgs(task_messages(unflagged, "t"))
+    assert fused == msgs(routed_messages(
+        unflagged.filter(~F.col("quarantined")), "t")) + msgs(
+        dead_letter_messages(unflagged, "t"))
+    assert sum(fused.values()) == len(rows) - 1
+    assert not any("ghosts" in topic for topic, _k, _v in fused)
 
 
 def test_metrics_listener(spark, events_dir):
