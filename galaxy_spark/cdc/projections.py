@@ -30,24 +30,14 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def _zip_map(names: Sequence[str], row: Column) -> Column:
-    return F.map_from_arrays(F.array(*[F.lit(n) for n in names]), row)
-
-
-def _arity_ok(names: Sequence[str], row: Column) -> Column:
-    return F.size(row) == len(names)
-
-
-def project_changes(df: DataFrame, columns: Sequence[str],
-                    org_row_col: str = "org_row",
-                    action_col: str = "action") -> DataFrame:
-    """Attach ``before``/``after`` maps + ``quarantined`` flag.
-
-    ``df`` must carry ``action`` and ``org_row`` (array of positional
-    rows: insert=[after], delete=[before], update=[before, after]).
-    ``columns`` is the ordered column-name list for this table (the
-    schema-registry lookup result, P1).
-    """
+def _project(df: DataFrame, names: Column, org_row_col: str,
+             action_col: str) -> DataFrame:
+    """Attach ``before``/``after`` maps + ``quarantined`` flag, each
+    row zipped with the column names in ``names`` (array<string>;
+    NULL = no schema for the row -> quarantine). ONE copy of the
+    image selection and the arity rule for both forms: a literal
+    array folds to constants, so the list form's plan is that of a
+    hand-written literal projection."""
     action = F.col(action_col)
     rows = F.col(org_row_col)
     # F.get, not getItem: a malformed update with ONE row must take
@@ -70,25 +60,43 @@ def project_changes(df: DataFrame, columns: Sequence[str],
     # (first non-null) image let an update with a short AFTER image
     # reach map_from_arrays and abort the job instead of
     # quarantining; a null image passes vacuously
-    bad = (F.size(rows) != expected_rows) | ~(
-        F.coalesce(_arity_ok(columns, before_row),
-                   before_row.isNull())
-        & F.coalesce(_arity_ok(columns, after_row),
-                     after_row.isNull())
-        & F.coalesce(before_row, after_row).isNotNull()
+    bad = (
+        names.isNull()
+        | (F.size(rows) != expected_rows)
+        | ~(
+            F.coalesce(F.size(before_row) == F.size(names),
+                       before_row.isNull())
+            & F.coalesce(F.size(after_row) == F.size(names),
+                         after_row.isNull())
+            & F.coalesce(before_row, after_row).isNotNull()
+        )
     )
 
     return (
         df.withColumn("quarantined", bad)
         .withColumn(
             "before",
-            F.when(~bad & before_row.isNotNull(), _zip_map(columns, before_row)),
-        )
+            F.when(~bad & before_row.isNotNull(),
+                   F.map_from_arrays(names, before_row)))
         .withColumn(
             "after",
-            F.when(~bad & after_row.isNotNull(), _zip_map(columns, after_row)),
-        )
+            F.when(~bad & after_row.isNotNull(),
+                   F.map_from_arrays(names, after_row)))
     )
+
+
+def project_changes(df: DataFrame, columns: Sequence[str],
+                    org_row_col: str = "org_row",
+                    action_col: str = "action") -> DataFrame:
+    """Attach ``before``/``after`` maps + ``quarantined`` flag.
+
+    ``df`` must carry ``action`` and ``org_row`` (array of positional
+    rows: insert=[after], delete=[before], update=[before, after]).
+    ``columns`` is the ordered column-name list for this table (the
+    schema-registry lookup result, P1).
+    """
+    return _project(df, F.array(*[F.lit(n) for n in columns]),
+                    org_row_col, action_col)
 
 
 def project_changes_by_schema(df: DataFrame, schemas: DataFrame,
@@ -113,53 +121,12 @@ def project_changes_by_schema(df: DataFrame, schemas: DataFrame,
     shape at scale; bootstrap the registry up front, route unknown
     tables to the DLQ, refresh the broadcast on the next
     micro-batch after a registry update)."""
-    action = F.col(action_col)
-    rows = F.col(org_row_col)
-    # F.get, not getItem: a malformed update with ONE row must take
-    # the quarantine path, and the arity check now evaluates the
-    # after image even on bad rows -- getItem(1) would raise
-    # INVALID_ARRAY_INDEX there instead of yielding NULL
-    first, second = F.get(rows, 0), F.get(rows, 1)
-
-    before_row = (
-        F.when(action == "delete", first)
-        .when(action == "update", first)
-    )
-    after_row = (
-        F.when(action == "insert", first)
-        .when(action == "update", second)
-    )
-    expected_rows = F.when(action == "update", F.lit(2)).otherwise(F.lit(1))
-    # same both-images arity rule as project_changes above
-    bad = (
-        F.col("__cols").isNull()
-        | (F.size(rows) != expected_rows)
-        | ~(
-            F.coalesce(F.size(before_row) == F.size("__cols"),
-                       before_row.isNull())
-            & F.coalesce(F.size(after_row) == F.size("__cols"),
-                         after_row.isNull())
-            & F.coalesce(before_row, after_row).isNotNull()
-        )
-    )
-
-    def zip_map(row: Column) -> Column:
-        return F.map_from_arrays(F.col("__cols"), row)
-
     joined = df.join(
         F.broadcast(schemas.select(
             "database", "table", F.col("columns").alias("__cols"))),
         ["database", "table"], "left")
-    return (
-        joined.withColumn("quarantined", bad)
-        .withColumn(
-            "before",
-            F.when(~bad & before_row.isNotNull(), zip_map(before_row)))
-        .withColumn(
-            "after",
-            F.when(~bad & after_row.isNotNull(), zip_map(after_row)))
-        .drop("__cols")
-    )
+    return _project(joined, F.col("__cols"), org_row_col,
+                    action_col).drop("__cols")
 
 
 def typed_table_view(df: DataFrame, registry, db: str, table: str,

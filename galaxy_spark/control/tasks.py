@@ -39,13 +39,17 @@ import time
 import uuid
 from collections.abc import Callable
 from dataclasses import asdict, dataclass, field
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from galaxy_spark.cdc.filters import TaskFilter
-from galaxy_spark.streaming.pipeline import (LiveFilterRef, SinkConfig,
-                                             start_pipeline,
+from galaxy_spark.streaming import state_store as ss
+from galaxy_spark.streaming.pipeline import (LIVE_SINKS, LiveFilterRef,
+                                             SinkConfig, start_pipeline,
                                              start_pipeline_live)
+from galaxy_spark.streaming.store_fs import store_fs
 
 
 @dataclass
@@ -202,25 +206,25 @@ class TaskManager:
             raise ValueError(
                 f"task {spec.task_id} already exists ({state}); "
                 "delete it before reusing the id")
-        if spec.task_kind not in ("cdc", "near_dup_index",
-                                  "search_index", "rollup",
-                                  "winnow_index", "item_cf",
-                                  "event_index", "user_seq"):
+        kind = _KINDS.get(spec.task_kind)
+        opts = spec.index_options or {}
+        if kind is None and spec.task_kind != "cdc":
             # a typo'd kind would silently fall into the CDC branch
             # and run the replication pipeline over whatever stream
             # the factory returns — fail at creation, like the
             # task_id validation above (r11 review)
+            names = [repr(k) for k in ("cdc", *_KINDS)]
             raise ValueError(
-                f"task_kind {spec.task_kind!r} unknown: use 'cdc', "
-                "'near_dup_index', 'search_index', 'rollup', "
-                "'winnow_index', 'item_cf', 'event_index' or "
-                "'user_seq'")
-        if spec.task_kind != "cdc":
+                f"task_kind {spec.task_kind!r} unknown: use "
+                f"{', '.join(names[:-1])} or {names[-1]}")
+        if kind is not None:
             # fail configuration errors at creation, not at the
             # first store construction mid-stream (r11 ADVICE)
-            _validated_delta_threshold(spec.index_options or {})
-            _validated_fs(spec.index_options or {})
-        elif spec.index_options:
+            _validated_delta_threshold(opts)
+            _validated_fs(opts)
+            for store in kind.stores:
+                _store_kwargs(store, opts)
+        elif opts:
             # r13 ADVICE: index_options tune the stateful kinds'
             # stores; a cdc task has none, so accepting (say)
             # fs='manifest_cas' here would silently do nothing —
@@ -229,12 +233,7 @@ class TaskManager:
             raise ValueError(
                 f"index_options apply to stateful task kinds only "
                 f"(task_kind='cdc' got "
-                f"{sorted(spec.index_options)!r})")
-        if spec.task_kind in ("item_cf", "event_index",
-                              "user_seq"):
-            _validated_retention_days(spec.index_options or {})
-        if spec.task_kind == "item_cf":
-            _validated_basket_cap(spec.index_options or {})
+                f"{sorted(opts)!r})")
         if spec.task_kind != "cdc" and spec.live:
             # live filter swapping is a CDC-pipeline feature; the
             # near-dup handler has no filter cell, and accepting
@@ -252,8 +251,23 @@ class TaskManager:
             raise ValueError(
                 f"db/table/column filters apply to cdc tasks only "
                 f"(task_kind={spec.task_kind!r})")
+        if spec.live and spec.sink_kind not in LIVE_SINKS:
+            # the live handler writes each batch itself: a sink it
+            # has no writer for was accepted here and then killed
+            # the task at its first micro-batch
+            raise ValueError(
+                f"live=True supports sink_kind "
+                f"{', '.join(map(repr, LIVE_SINKS))} only, got "
+                f"{spec.sink_kind!r}")
         self.tasks[spec.task_id] = spec
-        self._start(spec)
+        try:
+            self._start(spec)
+        except Exception:
+            # a spec that never started is never persisted; left
+            # registered, status() listed it and a corrected retry
+            # was refused as "already exists (stopped)"
+            del self.tasks[spec.task_id]
+            raise
         self._persist()
         return spec.task_id
 
@@ -266,278 +280,127 @@ class TaskManager:
         return os.path.join(self.state_dir, "stores",
                             f"{spec.task_id}-e{spec.checkpoint_epoch}")
 
-    def near_dup_stores(self, spec_or_id) -> tuple:
-        """(lsh, doc, pair, cluster, redirect) store handles for a
-        near_dup_index task — same paths whether the query is
-        running or stopped, so readers work across the lifecycle."""
-        from galaxy_spark.streaming.state_store import (
-            ParquetClusterStore, ParquetDocStore, ParquetLshStore,
-            ParquetPairStore, ParquetRedirectStore)
+    def stores(self, spec_or_id, kind: str | None = None) -> tuple:
+        """A stateful task's store handles, in its ``_KINDS`` row's
+        order — same paths whether the query is running or stopped,
+        so readers work across the lifecycle. ``kind``, when given,
+        must be the task's kind (a reader on another kind's task
+        would read foreign stores).
 
+        Write strategy: per-store defaults — delta tier (O(batch)
+        appends, compaction every 8th touch) for corpus-sized
+        stores, CoW for small hot ones — unless
+        ``index_options['delta_threshold']`` overrides uniformly;
+        explicit null selects CoW everywhere. Plus ONE commit
+        strategy (``fs``) for all of a task's stores, because a task
+        deploys onto one storage class."""
         spec = (self.tasks[spec_or_id]
                 if isinstance(spec_or_id, str) else spec_or_id)
+        if kind is not None and spec.task_kind != kind:
+            raise ValueError(
+                f"task {spec.task_id} is a {spec.task_kind!r} task, "
+                f"not {kind!r}")
+        opts = spec.index_options or {}
+        dt = _validated_delta_threshold(opts)
+        fs = _validated_fs(opts)
         root = self.store_root(spec)
-        stores = (
-            ParquetLshStore(self.spark, os.path.join(root, "lsh")),
-            ParquetDocStore(self.spark, os.path.join(root, "doc")),
-            ParquetPairStore(self.spark, os.path.join(root, "pair")),
-            ParquetClusterStore(self.spark,
-                                os.path.join(root, "cluster")),
-            ParquetRedirectStore(self.spark,
-                                 os.path.join(root, "redirect")))
-        # production default: delta-tier writes (O(batch) appends,
-        # compaction every 8th touch) for the CORPUS-SIZED stores
-        # only — doc/LSH/pair are insert-heavy and bucket-rewrite-
-        # bound, exactly where amortized compaction pays. The tiny
-        # hot cluster/redirect stores default to CoW: their
-        # per-epoch rewrite is already cheap, and every probe of a
-        # delta-bearing bucket would pay a groupBy fold over up to
-        # T-1 delta files for no write-side win (r11 ADVICE).
-        # Per-task override through the same options dict as the
-        # index tunables; explicit null selects CoW everywhere.
-        _apply_delta_thresholds(stores, spec.index_options or {},
-                                big=(True, True, True, False, False))
-        return stores
+        out = []
+        for row in _KINDS[spec.task_kind].stores:
+            store = row.cls(self.spark, os.path.join(root, row.subdir),
+                            **_store_kwargs(row, opts))
+            if dt is _DT_DEFAULT:
+                store.delta_threshold = (_BIG_STORE_DELTA if row.big
+                                         else None)
+            else:
+                store.delta_threshold = dt
+            store.fs = store_fs(fs)
+            out.append(store)
+        return tuple(out)
 
     def near_dup_pairs(self, task_id: str) -> DataFrame:
         """All near-dup pairs the task has emitted so far (the
         batch `dedup_minhash_lsh` output shape)."""
-        from galaxy_spark.streaming.state_store import \
-            streaming_near_dup_pairs
-
-        return streaming_near_dup_pairs(
-            self.near_dup_stores(task_id)[2])
+        return ss.streaming_near_dup_pairs(
+            self.stores(task_id, "near_dup_index")[2])
 
     def near_dup_assignments(self, task_id: str) -> DataFrame:
         """Cluster assignments over every document the task has
         ingested (the batch `dedup_cluster_canonical` shape); the
         doc store IS the streamed universe."""
-        from pyspark.sql import functions as F
-
-        from galaxy_spark.streaming.state_store import \
-            streaming_cluster_assignments
-
-        _lsh, doc, _pair, cstore, rstore = self.near_dup_stores(
-            task_id)
+        _lsh, doc, _pair, cstore, rstore = self.stores(
+            task_id, "near_dup_index")
         docs = doc.state().select(F.col("id").alias("doc_id"))
-        return streaming_cluster_assignments(docs, cstore, rstore)
-
-    def search_stores(self, spec_or_id) -> tuple:
-        """(postings, doclen, stats) store handles for a
-        search_index task — same paths running or stopped, so
-        BM25 queries work across the lifecycle."""
-        from galaxy_spark.streaming.state_store import (
-            ParquetCorpusStatsStore, ParquetDocLenStore,
-            ParquetPostingsStore)
-
-        spec = (self.tasks[spec_or_id]
-                if isinstance(spec_or_id, str) else spec_or_id)
-        root = self.store_root(spec)
-        stores = (
-            ParquetPostingsStore(self.spark,
-                                 os.path.join(root, "postings")),
-            ParquetDocLenStore(self.spark,
-                               os.path.join(root, "doclen")),
-            ParquetCorpusStatsStore(self.spark,
-                                    os.path.join(root, "stats")))
-        # postings/doclen are corpus-sized (delta tier); the corpus
-        # stats store is ONE row read on every query — CoW, same
-        # hot-store reasoning as cluster/redirect above
-        _apply_delta_thresholds(stores, spec.index_options or {},
-                                big=(True, True, False))
-        return stores
+        return ss.streaming_cluster_assignments(docs, cstore, rstore)
 
     def search_bm25(self, task_id: str,
                     terms: tuple[str, ...]) -> DataFrame:
         """Top-20 BM25 over the task's incrementally-built index
         (the batch ``text_bm25_search`` output shape; reads
         layout-pruned to the query terms' buckets)."""
-        from galaxy_spark.streaming.state_store import streaming_bm25
-
-        postings, doclen, stats = self.search_stores(task_id)
-        return streaming_bm25(postings, doclen, stats, terms)
+        postings, doclen, stats = self.stores(task_id, "search_index")
+        return ss.streaming_bm25(postings, doclen, stats, terms)
 
     def search_inverted_index(self, task_id: str) -> DataFrame:
         """The task's accumulated index in the batch
         ``text_inverted_index`` output shape."""
-        from galaxy_spark.streaming.state_store import \
-            streaming_inverted_index
-
-        return streaming_inverted_index(self.search_stores(task_id)[0])
-
-    def _start_search_index(self, spec: TaskSpec):
-        from galaxy_spark.streaming.state_store import \
-            start_streaming_search_index
-
-        env = self.source_factory(self.spark, spec)
-        postings, doclen, stats = self.search_stores(spec)
-        opts = dict(spec.index_options)
-        return start_streaming_search_index(
-            env, postings, doclen, stats, self.checkpoint_dir(spec),
-            text_col=opts.get("text_col", "text"),
-            id_col=opts.get("id_col", "doc_id"))
-
-    def rollup_store(self, spec_or_id):
-        """The multi-grain rollup store handle for a rollup task —
-        same path running or stopped, so the three readers work
-        across the lifecycle."""
-        from galaxy_spark.streaming.state_store import \
-            ParquetRollupStore
-
-        spec = (self.tasks[spec_or_id]
-                if isinstance(spec_or_id, str) else spec_or_id)
-        store = ParquetRollupStore(
-            self.spark,
-            os.path.join(self.store_root(spec), "rollup"))
-        # (grain, bucket, type)-keyed counters: calendar-bounded key
-        # space but touched broadly every batch — the delta tier's
-        # O(batch) appends beat a per-trigger rewrite of most
-        # buckets
-        _apply_delta_thresholds((store,), spec.index_options or {},
-                                big=(True,))
-        return store
+        return ss.streaming_inverted_index(
+            self.stores(task_id, "search_index")[0])
 
     def rollup_snapshot(self, task_id: str) -> DataFrame:
         """Accumulated multi-grain rollup rows (the batch
         ``events_multi_rollup`` output shape)."""
-        return self.rollup_store(task_id).state()
+        return self.stores(task_id, "rollup")[0].state()
 
     def rollup_gapfill(self, task_id: str) -> DataFrame:
         """Gap-filled hourly series + trailing-24h window off the
         task's store (== ``events_timeseries_gapfill`` over the
         same events)."""
-        from galaxy_spark.streaming.state_store import \
-            streaming_gapfill
-
-        return streaming_gapfill(self.rollup_store(task_id))
+        return ss.streaming_gapfill(self.stores(task_id, "rollup")[0])
 
     def rollup_anomaly(self, task_id: str) -> DataFrame:
         """Daily volume-anomaly flags off the task's store
         (== ``events_anomaly_daily_counts`` over the same
         events)."""
-        from galaxy_spark.streaming.state_store import \
-            streaming_anomaly
-
-        return streaming_anomaly(self.rollup_store(task_id))
-
-    def _start_rollup(self, spec: TaskSpec):
-        from galaxy_spark.streaming.state_store import \
-            start_incremental_rollup_parquet
-
-        env = self.source_factory(self.spark, spec)
-        return start_incremental_rollup_parquet(
-            env, self.rollup_store(spec), self.checkpoint_dir(spec))
-
-    def winnow_store(self, spec_or_id):
-        """The winnowing-fingerprint store handle for a
-        winnow_index task — same path running or stopped."""
-        from galaxy_spark.streaming.state_store import \
-            ParquetWinnowStore
-
-        spec = (self.tasks[spec_or_id]
-                if isinstance(spec_or_id, str) else spec_or_id)
-        store = ParquetWinnowStore(
-            self.spark,
-            os.path.join(self.store_root(spec), "winnow"))
-        # corpus-sized (one bounded row per distinct fingerprint)
-        # -> delta tier by default, like postings/doc/LSH
-        _apply_delta_thresholds((store,), spec.index_options or {},
-                                big=(True,))
-        return store
+        return ss.streaming_anomaly(self.stores(task_id, "rollup")[0])
 
     def winnow_pairs(self, task_id: str) -> DataFrame:
         """Near-dup pairs over everything the task has streamed so
         far (the batch ``dedup_winnowing_pairs`` output shape —
         the exact reader, recomputed from accumulated fingerprint
         state)."""
-        from galaxy_spark.streaming.state_store import \
-            streaming_winnowing_pairs
-
-        return streaming_winnowing_pairs(self.winnow_store(task_id))
-
-    def _start_winnow(self, spec: TaskSpec):
-        from galaxy_spark.streaming.state_store import \
-            start_streaming_winnowing_index
-
-        env = self.source_factory(self.spark, spec)
-        opts = dict(spec.index_options)
-        return start_streaming_winnowing_index(
-            env, self.winnow_store(spec), self.checkpoint_dir(spec),
-            text_col=opts.get("text_col", "text"),
-            id_col=opts.get("id_col", "doc_id"))
-
-    def item_cf_stores(self, spec_or_id) -> tuple:
-        """(basket, cooc, deg) store handles for an item_cf task —
-        same paths running or stopped."""
-        from galaxy_spark.streaming.state_store import (
-            ParquetBasketStore, ParquetCoocStore,
-            ParquetItemDegStore)
-
-        spec = (self.tasks[spec_or_id]
-                if isinstance(spec_or_id, str) else spec_or_id)
-        root = self.store_root(spec)
-        stores = (
-            ParquetBasketStore(self.spark,
-                               os.path.join(root, "basket"),
-                               retention_days=_validated_retention_days(
-                                   spec.index_options or {}),
-                               basket_cap=_validated_basket_cap(
-                                   spec.index_options or {})),
-            ParquetCoocStore(self.spark, os.path.join(root, "cooc")),
-            ParquetItemDegStore(self.spark,
-                                os.path.join(root, "deg")))
-        # baskets and pair counts are corpus-sized (delta tier);
-        # the degree store is |items| rows probed broadcast-side on
-        # every read — CoW, the hot-store reasoning
-        _apply_delta_thresholds(stores, spec.index_options or {},
-                                big=(True, True, False))
-        return stores
+        return ss.streaming_winnowing_pairs(
+            self.stores(task_id, "winnow_index")[0])
 
     def item_cf_topk(self, task_id: str) -> DataFrame:
         """Top-3 similar items off the task's accumulated
         co-occurrence hub (== batch ``similarity_item_cf_topk``)."""
-        from galaxy_spark.streaming.state_store import \
-            streaming_item_cf_topk
-
-        _b, cooc, deg = self.item_cf_stores(task_id)
-        return streaming_item_cf_topk(cooc, deg)
+        _b, cooc, deg = self.stores(task_id, "item_cf")
+        return ss.streaming_item_cf_topk(cooc, deg)
 
     def frequent_pairs(self, task_id: str) -> DataFrame:
         """Frequent pairs + confidence off the same hub
         (== batch ``mining_frequent_pairs``)."""
-        from galaxy_spark.streaming.state_store import \
-            streaming_frequent_pairs
-
-        _b, cooc, deg = self.item_cf_stores(task_id)
-        return streaming_frequent_pairs(cooc, deg)
+        _b, cooc, deg = self.stores(task_id, "item_cf")
+        return ss.streaming_frequent_pairs(cooc, deg)
 
     def pair_lift(self, task_id: str) -> DataFrame:
         """Association lift over the task's accumulated hub
         (== batch ``mining_pair_lift``)."""
-        from galaxy_spark.streaming.state_store import \
-            streaming_pair_lift
-
-        baskets, cooc, deg = self.item_cf_stores(task_id)
-        return streaming_pair_lift(cooc, deg, baskets)
+        baskets, cooc, deg = self.stores(task_id, "item_cf")
+        return ss.streaming_pair_lift(cooc, deg, baskets)
 
     def clustering_coefficient(self, task_id: str) -> DataFrame:
         """Per-node clustering coefficient over the co-purchase
         graph the task's cooc store holds (== batch
         ``graph_clustering_coefficient`` for uncapped hubs)."""
-        from galaxy_spark.streaming.state_store import \
-            streaming_clustering_coefficient
-
-        _b, cooc, _d = self.item_cf_stores(task_id)
-        return streaming_clustering_coefficient(cooc)
+        return ss.streaming_clustering_coefficient(
+            self.stores(task_id, "item_cf")[1])
 
     def degree_assortativity(self, task_id: str) -> DataFrame:
         """Newman's r over the same graph (== batch
         ``graph_degree_assortativity`` for uncapped hubs)."""
-        from galaxy_spark.streaming.state_store import \
-            streaming_degree_assortativity
-
-        _b, cooc, _d = self.item_cf_stores(task_id)
-        return streaming_degree_assortativity(cooc)
+        return ss.streaming_degree_assortativity(
+            self.stores(task_id, "item_cf")[1])
 
     def common_neighbors(self, task_id: str,
                          max_degree: int | None = None) -> DataFrame:
@@ -546,221 +409,76 @@ class TaskManager:
         ``max_degree``, for uncapped hubs). ``max_degree`` is the
         hot-node sampling lever — per-read, not per-task, because
         it shapes the ANSWER (sampled features), not the state."""
-        from galaxy_spark.streaming.state_store import \
-            streaming_common_neighbors
-
-        _b, cooc, _d = self.item_cf_stores(task_id)
-        return streaming_common_neighbors(cooc, max_degree)
+        return ss.streaming_common_neighbors(
+            self.stores(task_id, "item_cf")[1], max_degree)
 
     def resource_allocation(self, task_id: str) -> DataFrame:
         """RA link-prediction index (== batch
         ``graph_resource_allocation`` for uncapped hubs)."""
-        from galaxy_spark.streaming.state_store import \
-            streaming_resource_allocation
-
-        _b, cooc, _d = self.item_cf_stores(task_id)
-        return streaming_resource_allocation(cooc)
-
-    def _start_item_cf(self, spec: TaskSpec):
-        from galaxy_spark.streaming.state_store import \
-            start_streaming_item_cf
-
-        env = self.source_factory(self.spark, spec)
-        baskets, cooc, deg = self.item_cf_stores(spec)
-        return start_streaming_item_cf(
-            env, baskets, cooc, deg, self.checkpoint_dir(spec))
-
-    def event_index_stores(self, spec_or_id) -> tuple:
-        """(purchase, event-index) store handles for an
-        event_index task — same paths running or stopped.
-        ``index_options['retention_days']`` bounds the EVENT-TIME
-        INDEX (the state_store retention design: readers answer
-        over the retained window); the purchase-fact store stays
-        exact (it is the revenue ledger)."""
-        from galaxy_spark.streaming.state_store import (
-            ParquetEventIndexStore, ParquetPurchaseStore)
-
-        spec = (self.tasks[spec_or_id]
-                if isinstance(spec_or_id, str) else spec_or_id)
-        root = self.store_root(spec)
-        stores = (
-            ParquetPurchaseStore(self.spark,
-                                 os.path.join(root, "purchase")),
-            ParquetEventIndexStore(
-                self.spark, os.path.join(root, "evindex"),
-                retention_days=_validated_retention_days(
-                    spec.index_options or {})))
-        # both are user-keyed activity stores that grow with the
-        # corpus — delta tier for both
-        _apply_delta_thresholds(stores, spec.index_options or {},
-                                big=(True, True))
-        return stores
+        return ss.streaming_resource_allocation(
+            self.stores(task_id, "item_cf")[1])
 
     def funnel(self, task_id: str) -> DataFrame:
         """Stage-gated funnel over everything the task streamed
         (== batch ``events_funnel_conversion``)."""
-        from galaxy_spark.streaming.state_store import \
-            streaming_funnel
-
-        return streaming_funnel(self.event_index_stores(task_id)[1])
+        return ss.streaming_funnel(self.stores(task_id, "event_index")[1])
 
     def funnel_windowed(self, task_id: str) -> DataFrame:
         """24h-stage funnel off the same index
         (== batch ``events_funnel_windowed``)."""
-        from galaxy_spark.streaming.state_store import \
-            streaming_funnel_windowed
-
-        return streaming_funnel_windowed(
-            self.event_index_stores(task_id)[1])
+        return ss.streaming_funnel_windowed(
+            self.stores(task_id, "event_index")[1])
 
     def retention_cohorts(self, task_id: str) -> DataFrame:
         """Weekly retention cohorts off the same index
         (== batch ``events_retention_cohorts``)."""
-        from galaxy_spark.streaming.state_store import \
-            streaming_retention
-
-        return streaming_retention(
-            self.event_index_stores(task_id)[1])
+        return ss.streaming_retention(
+            self.stores(task_id, "event_index")[1])
 
     def attribution_last_touch(self, task_id: str) -> DataFrame:
         """Daily last-touch attribution off purchase facts + the
         click index (== batch ``events_attribution_last_touch``)."""
-        from galaxy_spark.streaming.state_store import \
-            streaming_attribution_last_touch
-
-        pur, idx = self.event_index_stores(task_id)
-        return streaming_attribution_last_touch(pur, idx)
+        pur, idx = self.stores(task_id, "event_index")
+        return ss.streaming_attribution_last_touch(pur, idx)
 
     def time_to_convert(self, task_id: str) -> DataFrame:
         """Click-to-purchase latency buckets off the same two
         stores (== batch ``events_time_to_convert``)."""
-        from galaxy_spark.streaming.state_store import \
-            streaming_time_to_convert
-
-        pur, idx = self.event_index_stores(task_id)
-        return streaming_time_to_convert(pur, idx)
-
-    def _start_event_index(self, spec: TaskSpec):
-        from galaxy_spark.streaming.state_store import \
-            start_streaming_attribution_hub
-
-        env = self.source_factory(self.spark, spec)
-        pur, idx = self.event_index_stores(spec)
-        return start_streaming_attribution_hub(
-            env, pur, idx, self.checkpoint_dir(spec))
-
-    def user_seq_store(self, spec_or_id):
-        """Typed-timeline store handle for a user_seq task — same
-        path running or stopped. ``index_options['retention_days']``
-        bounds the timelines (readers answer over the retained
-        window)."""
-        from galaxy_spark.streaming.state_store import \
-            ParquetUserSeqStore
-
-        spec = (self.tasks[spec_or_id]
-                if isinstance(spec_or_id, str) else spec_or_id)
-        store = ParquetUserSeqStore(
-            self.spark,
-            os.path.join(self.store_root(spec), "userseq"),
-            retention_days=_validated_retention_days(
-                spec.index_options or {}))
-        # user-keyed activity store growing with the corpus —
-        # delta tier
-        _apply_delta_thresholds((store,), spec.index_options or {},
-                                big=(True,))
-        return store
+        pur, idx = self.stores(task_id, "event_index")
+        return ss.streaming_time_to_convert(pur, idx)
 
     def path_trigrams(self, task_id: str) -> DataFrame:
         """Three-step event-type paths over everything the task
         streamed (== batch ``events_path_trigrams``)."""
-        from galaxy_spark.streaming.state_store import \
-            streaming_path_trigrams
-
-        return streaming_path_trigrams(self.user_seq_store(task_id))
+        return ss.streaming_path_trigrams(
+            self.stores(task_id, "user_seq")[0])
 
     def markov_transitions(self, task_id: str) -> DataFrame:
         """First-order transition matrix off the same timelines
         (== batch ``events_markov_transitions``)."""
-        from galaxy_spark.streaming.state_store import \
-            streaming_markov_transitions
-
-        return streaming_markov_transitions(
-            self.user_seq_store(task_id))
+        return ss.streaming_markov_transitions(
+            self.stores(task_id, "user_seq")[0])
 
     def interarrival_burstiness(self, task_id: str) -> DataFrame:
         """Per-type burstiness off the same timelines (== batch
         ``events_interarrival_burstiness``)."""
-        from galaxy_spark.streaming.state_store import \
-            streaming_interarrival_burstiness
-
-        return streaming_interarrival_burstiness(
-            self.user_seq_store(task_id))
-
-    def _start_user_seq(self, spec: TaskSpec):
-        from galaxy_spark.streaming.state_store import \
-            start_streaming_user_seq
-
-        env = self.source_factory(self.spark, spec)
-        return start_streaming_user_seq(
-            env, self.user_seq_store(spec),
-            self.checkpoint_dir(spec))
-
-    def _start_near_dup(self, spec: TaskSpec):
-        from galaxy_spark.streaming.state_store import \
-            start_streaming_near_dup_clustering
-
-        env = self.source_factory(self.spark, spec)
-        lsh, doc, pair, cstore, rstore = self.near_dup_stores(spec)
-        opts = dict(spec.index_options)
-        return start_streaming_near_dup_clustering(
-            env, lsh, doc, pair, cstore, rstore,
-            self.checkpoint_dir(spec),
-            n=int(opts.get("n", 5)),
-            n_hashes=int(opts.get("n_hashes", 32)),
-            bands=int(opts.get("bands", 8)),
-            threshold=float(opts.get("threshold", 0.5)),
-            text_col=opts.get("text_col", "text"),
-            id_col=opts.get("id_col", "doc_id"))
+        return ss.streaming_interarrival_burstiness(
+            self.stores(task_id, "user_seq")[0])
 
     def _start(self, spec: TaskSpec) -> None:
-        if spec.task_kind == "near_dup_index":
-            self.queries[spec.task_id] = self._start_near_dup(spec)
-            spec.stopped = False
-            return
-        if spec.task_kind == "search_index":
-            self.queries[spec.task_id] = self._start_search_index(spec)
-            spec.stopped = False
-            return
-        if spec.task_kind == "rollup":
-            self.queries[spec.task_id] = self._start_rollup(spec)
-            spec.stopped = False
-            return
-        if spec.task_kind == "winnow_index":
-            self.queries[spec.task_id] = self._start_winnow(spec)
-            spec.stopped = False
-            return
-        if spec.task_kind == "item_cf":
-            self.queries[spec.task_id] = self._start_item_cf(spec)
-            spec.stopped = False
-            return
-        if spec.task_kind == "event_index":
-            self.queries[spec.task_id] = \
-                self._start_event_index(spec)
-            spec.stopped = False
-            return
-        if spec.task_kind == "user_seq":
-            self.queries[spec.task_id] = \
-                self._start_user_seq(spec)
-            spec.stopped = False
-            return
         env = self.source_factory(self.spark, spec)
-        if spec.live:
+        kind = _KINDS.get(spec.task_kind)
+        if kind is not None:
+            q = kind.start(env, *self.stores(spec),
+                           self.checkpoint_dir(spec),
+                           **_start_kwargs(kind, spec.index_options or {}))
+        elif spec.live:
             ref = LiveFilterRef(spec.task_filter())
-            self.live_filters[spec.task_id] = ref
             q = start_pipeline_live(
                 env, spec.task_id, ref, list(spec.columns),
                 spec.sink(), self.checkpoint_dir(spec),
             )
+            self.live_filters[spec.task_id] = ref
         else:
             q = start_pipeline(
                 env, spec.task_id, spec.task_filter(), list(spec.columns),
@@ -989,23 +707,113 @@ def _validated_basket_cap(opts: dict) -> int | None:
     return int(bc)
 
 
-def _apply_delta_thresholds(stores, opts: dict,
-                            big: tuple[bool, ...]) -> None:
-    """Set each store's write strategy: per-store defaults (delta
-    tier for corpus-sized stores, CoW for small hot ones) unless
-    the task option overrides uniformly; plus the task-wide commit
-    strategy (``fs``) — one strategy for ALL of a task's stores,
-    because a task deploys onto one storage class."""
-    from galaxy_spark.streaming.store_fs import store_fs
+#: index_options a store constructor takes -> its validator
+_STORE_OPTIONS = {"retention_days": _validated_retention_days,
+                  "basket_cap": _validated_basket_cap}
 
-    dt = _validated_delta_threshold(opts)
-    fs = _validated_fs(opts)
-    for s, is_big in zip(stores, big):
-        if dt is _DT_DEFAULT:
-            s.delta_threshold = _BIG_STORE_DELTA if is_big else None
-        else:
-            s.delta_threshold = dt
-        s.fs = store_fs(fs)
+#: casts for the starters' JSON-borne numeric tunables
+_START_CASTS = {"n": int, "n_hashes": int, "bands": int,
+                "threshold": float}
+
+
+class _Store(NamedTuple):
+    """One durable store of a stateful kind: its sub-directory
+    under the task's store root, its class, whether it is
+    corpus-sized (delta-tier writes by default) and the
+    ``index_options`` its constructor takes."""
+
+    subdir: str
+    cls: type
+    big: bool
+    options: tuple[str, ...] = ()
+
+
+class _Kind(NamedTuple):
+    """One stateful task kind: its stores, in the order its starter
+    takes them after the stream, the starter, and the
+    ``index_options`` the starter reads (absent ones take the
+    starter's own defaults)."""
+
+    stores: tuple[_Store, ...]
+    start: Callable
+    start_options: tuple[str, ...] = ()
+
+
+#: every task kind except "cdc", one row each
+_KINDS: dict[str, _Kind] = {
+    "near_dup_index": _Kind(
+        # delta tier for the CORPUS-SIZED stores only — doc/LSH/pair
+        # are insert-heavy and bucket-rewrite-bound, exactly where
+        # amortized compaction pays. The tiny hot cluster/redirect
+        # stores default to CoW: their per-epoch rewrite is already
+        # cheap, and every probe of a delta-bearing bucket would pay
+        # a groupBy fold over up to T-1 delta files for no
+        # write-side win (r11 ADVICE).
+        (_Store("lsh", ss.ParquetLshStore, True),
+         _Store("doc", ss.ParquetDocStore, True),
+         _Store("pair", ss.ParquetPairStore, True),
+         _Store("cluster", ss.ParquetClusterStore, False),
+         _Store("redirect", ss.ParquetRedirectStore, False)),
+        ss.start_streaming_near_dup_clustering,
+        ("n", "n_hashes", "bands", "threshold", "text_col", "id_col")),
+    "search_index": _Kind(
+        # postings/doclen are corpus-sized (delta tier); the corpus
+        # stats store is ONE row read on every query — CoW, same
+        # hot-store reasoning as cluster/redirect above
+        (_Store("postings", ss.ParquetPostingsStore, True),
+         _Store("doclen", ss.ParquetDocLenStore, True),
+         _Store("stats", ss.ParquetCorpusStatsStore, False)),
+        ss.start_streaming_search_index, ("text_col", "id_col")),
+    "rollup": _Kind(
+        # (grain, bucket, type)-keyed counters: calendar-bounded key
+        # space but touched broadly every batch — the delta tier's
+        # O(batch) appends beat a per-trigger rewrite of most
+        # buckets
+        (_Store("rollup", ss.ParquetRollupStore, True),),
+        ss.start_incremental_rollup_parquet),
+    "winnow_index": _Kind(
+        # corpus-sized (one bounded row per distinct fingerprint)
+        # -> delta tier by default, like postings/doc/LSH
+        (_Store("winnow", ss.ParquetWinnowStore, True),),
+        ss.start_streaming_winnowing_index, ("text_col", "id_col")),
+    "item_cf": _Kind(
+        # baskets and pair counts are corpus-sized (delta tier);
+        # the degree store is |items| rows probed broadcast-side on
+        # every read — CoW, the hot-store reasoning
+        (_Store("basket", ss.ParquetBasketStore, True,
+                ("retention_days", "basket_cap")),
+         _Store("cooc", ss.ParquetCoocStore, True),
+         _Store("deg", ss.ParquetItemDegStore, False)),
+        ss.start_streaming_item_cf),
+    "event_index": _Kind(
+        # both are user-keyed activity stores that grow with the
+        # corpus — delta tier for both. retention_days bounds the
+        # EVENT-TIME INDEX (readers answer over the retained
+        # window); the purchase-fact store stays exact (it is the
+        # revenue ledger)
+        (_Store("purchase", ss.ParquetPurchaseStore, True),
+         _Store("evindex", ss.ParquetEventIndexStore, True,
+                ("retention_days",))),
+        ss.start_streaming_attribution_hub),
+    "user_seq": _Kind(
+        # user-keyed activity store growing with the corpus — delta
+        # tier; retention_days bounds the timelines (readers answer
+        # over the retained window)
+        (_Store("userseq", ss.ParquetUserSeqStore, True,
+                ("retention_days",)),),
+        ss.start_streaming_user_seq),
+}
+
+
+def _store_kwargs(store: _Store, opts: dict) -> dict:
+    """Validated constructor ``index_options`` of one store."""
+    return {o: _STORE_OPTIONS[o](opts) for o in store.options}
+
+
+def _start_kwargs(kind: _Kind, opts: dict) -> dict:
+    """The starter tunables present in ``index_options``."""
+    return {o: _START_CASTS.get(o, lambda v: v)(opts[o])
+            for o in kind.start_options if o in opts}
 
 
 def new_task_id() -> str:

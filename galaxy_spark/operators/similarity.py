@@ -702,19 +702,23 @@ def lsh_near_dup_pairs(emb: DataFrame, threshold: float,
     # only on near-threshold survivors (~the output size).
     #
     # r15 (guide §4.2): mapInArrow instead of mapInPandas — the
-    # Arrow list<double> columns flatten to their contiguous
+    # Arrow list<float> columns flatten to their contiguous
     # values buffer and reshape to (rows, dim) with ZERO per-row
     # work, where the pandas path materialized one ndarray cell
     # per row and np.stack re-copied them (per-batch setup was the
-    # verify stage's CPU, not the dot itself).
+    # verify stage's CPU, not the dot itself). The values are
+    # float32: widen them (exactly) to float64 BEFORE the dot — a
+    # float32 sum swamps every term below half an ulp of its
+    # running value, a drift that reaches the 1e-6 margin at a few
+    # hundred dims, while the margin is justified for f64 only.
     def prescore(batches):
         import pyarrow as pa
         for rb in batches:
             if rb.num_rows == 0:
                 continue
-            A = np.asarray(rb.column("va").flatten()) \
+            A = np.asarray(rb.column("va").flatten(), dtype=np.float64) \
                 .reshape(rb.num_rows, -1)
-            B = np.asarray(rb.column("vb").flatten()) \
+            B = np.asarray(rb.column("vb").flatten(), dtype=np.float64) \
                 .reshape(rb.num_rows, -1)
             na = np.asarray(rb.column("na"))
             nb_ = np.asarray(rb.column("nb"))

@@ -587,28 +587,47 @@ class BinlogStreamReader(DataSourceStreamReader):
             self._scan_file, self._scan_pos = "", 0
         return self._gtids
 
-    def _scan_gtids(self, file: str | None = None,
-                    pos: int | None = None):
-        """STATELESS executed-set scan of the directory up to
-        (file, pos) — the whole directory when omitted. Includes
-        PREVIOUS_GTIDS declarations (the gtid_purged seeding a real
-        replica gets at provisioning): history purged before these
-        segments is still EXECUTED history, and omitting it made
-        the error-1236 gate fire on healthy streams (r9 review
-        wave 2)."""
+    def _fold_gtids(self, out, file: str | None = None,
+                    pos: int | None = None, since: tuple = ("", 0)):
+        """Fold into executed set ``out`` every GTID-bearing event
+        from the watermark ``since`` (an event boundary; ``("", 0)``
+        = the directory head) up to (file, pos) — the whole
+        directory when ``file`` is omitted. ONE copy of the fold
+        for the stateless scan and the incremental tracker:
+
+        - PREVIOUS_GTIDS / GTID_LIST merge in (the gtid_purged
+          seeding a real replica gets at provisioning): history
+          purged before these segments is still EXECUTED history —
+          without it the carried sets regress on restart and the
+          purged-gap (error-1236) gate misfires on healthy streams
+          (r9 review wave 2);
+        - a GTID event adds its GTID;
+        - a tagged GTID adds only when its body validates: an
+          unvalidatable body stays untracked, so the set
+          under-covers and resume falls back to the conservative
+          boundary — never a false claim."""
         gtid_et, _anon_et, prev_et = self._etypes()
         tagged_et = self._tagged_et()
-        out = self._gset_cls()()
+        since_file, since_pos = since
         for s in _segments(self.path):
-            if file and _seg_key(s) > _seg_key(file):
+            k = _seg_key(s)
+            if since_file and k < _seg_key(since_file):
+                continue                # fully merged already
+            if file and k > _seg_key(file):
                 break
             fpath = os.path.join(self.path, s)
             size = os.path.getsize(fpath)
+            # resume the watermark segment's walk AT the watermark
+            # instead of re-walking from byte 0 every micro-batch
+            # (r9 review: that made the growing tail's per-trigger
+            # cost quadratic over the segment lifetime)
+            start_at = (since_pos if s == since_file and since_pos >= 4
+                        else None)
             with open(fpath, "rb") as f:
                 for p, etype, esize, _lp, _ts in \
-                        _walk_event_headers(f, size):
+                        _walk_event_headers(f, size, start=start_at):
                     if file and s == file and p + esize > pos:
-                        break
+                        break           # beyond the offset
                     if etype == prev_et:
                         out.merge(self._decode_prev_at(f, p, esize))
                     elif etype == gtid_et:
@@ -617,12 +636,14 @@ class BinlogStreamReader(DataSourceStreamReader):
                     elif tagged_et is not None and etype == tagged_et:
                         tg = self._read_tagged_at(f, p, esize)
                         if tg is not None:
-                            # an unvalidatable body stays untracked:
-                            # the carried set then under-covers and
-                            # resume falls back to the conservative
-                            # boundary — never a false claim
                             out.add(tg)
         return out
+
+    def _scan_gtids(self, file: str | None = None,
+                    pos: int | None = None):
+        """STATELESS executed-set scan of the directory up to
+        (file, pos) — the whole directory when omitted."""
+        return self._fold_gtids(self._gset_cls()(), file, pos)
 
     def _gtids_at(self, file: str, pos: int) -> str:
         """Executed-GTID text at offset (file, pos): the starting
@@ -638,8 +659,6 @@ class BinlogStreamReader(DataSourceStreamReader):
         first start (r8 carried GTIDs at ``startingGtids``
         resolution time and went back to bare (file, pos)
         afterward)."""
-        gtid_et, _anon_et, prev_et = self._etypes()
-        tagged_et = self._tagged_et()
         self._tracker()
         target = (_seg_key(file), pos)
         if target < (_seg_key(self._scan_file), self._scan_pos):
@@ -655,44 +674,10 @@ class BinlogStreamReader(DataSourceStreamReader):
             out = self._scan_gtids(file, pos)
             out.merge(self._seed)
             return str(out)
-        for s in _segments(self.path):
-            k = _seg_key(s)
-            if self._scan_file and k < _seg_key(self._scan_file):
-                continue                # fully merged already
-            if k > _seg_key(file):
-                break
-            fpath = os.path.join(self.path, s)
-            size = os.path.getsize(fpath)
-            # resume the watermark segment's walk AT the watermark
-            # (an event boundary by construction — offsets are
-            # aligned ends) instead of re-walking from byte 0 every
-            # micro-batch (r9 review: that made the growing tail's
-            # per-trigger cost quadratic over the segment lifetime)
-            start_at = (self._scan_pos
-                        if s == self._scan_file and self._scan_pos >= 4
-                        else None)
-            with open(fpath, "rb") as f:
-                for p, etype, esize, _lp, _ts in \
-                        _walk_event_headers(f, size, start=start_at):
-                    if s == file and p + esize > pos:
-                        break           # beyond the offset
-                    if etype == prev_et:
-                        # gtid_purged seeding: history purged before
-                        # these segments is still EXECUTED history —
-                        # without it the carried sets regress on
-                        # restart and the purged-gap gate misfires
-                        # on healthy streams (r9 review wave 2)
-                        self._gtids.merge(
-                            self._decode_prev_at(f, p, esize))
-                    elif etype == gtid_et:
-                        self._gtids.add(
-                            self._read_gtid_at(f, p, esize,
-                                               f"{s}:{p}"))
-                    elif tagged_et is not None and etype == tagged_et:
-                        tg = self._read_tagged_at(f, p, esize)
-                        if tg is not None:     # unvalidatable body:
-                            self._gtids.add(tg)  # under-cover, never
-                                                 # falsely claim
+        # offsets are aligned ends, so the watermark is an event
+        # boundary by construction
+        self._fold_gtids(self._gtids, file, pos,
+                         since=(self._scan_file, self._scan_pos))
         self._scan_file, self._scan_pos = file, pos
         return str(self._gtids)
 

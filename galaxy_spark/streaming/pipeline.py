@@ -224,6 +224,33 @@ def live_memory_rows(task_id: str) -> list:
     return list(_LIVE_MEMORY.get(task_id, []))
 
 
+def _live_kafka(msgs: DataFrame, sink: SinkConfig, task_id: str) -> None:
+    msgs.write.format("kafka").options(**sink.options).save()
+
+
+def _live_memory(msgs: DataFrame, sink: SinkConfig, task_id: str) -> None:
+    cap = int(sink.options.get("maxRows", 10_000))
+    buf = _LIVE_MEMORY[task_id]
+    batch = msgs.limit(cap + 1 - len(buf)).collect()
+    if len(buf) + len(batch) > cap:
+        raise RuntimeError(
+            f"live memory sink exceeded maxRows={cap}; this "
+            "sink is a test/debug surface — use the kafka or "
+            "parquet sink for real volume")
+    buf.extend(batch)
+
+
+def _live_parquet(msgs: DataFrame, sink: SinkConfig, task_id: str) -> None:
+    msgs.write.mode("append").options(**sink.options).parquet(
+        sink.options["path"])
+
+
+#: the live pipeline's per-batch writer for each sink kind it supports
+_LIVE_WRITERS = {"kafka": _live_kafka, "memory": _live_memory,
+                 "parquet": _live_parquet}
+LIVE_SINKS = tuple(_LIVE_WRITERS)
+
+
 def start_pipeline_live(env_stream: DataFrame, task_id: str,
                         live_filter: LiveFilterRef,
                         columns: Sequence[str], sink: SinkConfig,
@@ -236,15 +263,21 @@ def start_pipeline_live(env_stream: DataFrame, task_id: str,
     algebra — only the evaluation point moves from stream-plan time
     to batch-plan time.
 
-    Sink semantics: ``kafka``/``parquet`` write DISTRIBUTED per
-    batch (the production paths — no rows ever reach the driver);
-    ``memory`` is the TEST/DEBUG surface only, like the stock
-    memory sink it replaces: it collects each batch to a driver
-    buffer and therefore HARD-CAPS total buffered rows
+    Sink semantics (``LIVE_SINKS``; any other kind is refused
+    before the query starts): ``kafka``/``parquet`` write
+    DISTRIBUTED per batch (the production paths — no rows ever
+    reach the driver); ``memory`` is the TEST/DEBUG surface only,
+    like the stock memory sink it replaces: it collects each batch
+    to a driver buffer and therefore HARD-CAPS total buffered rows
     (``sink.options["maxRows"]``, default 10_000) — exceeding the
     cap kills the query with a clear error instead of silently
     eating driver memory at real volume.
     """
+    write = _LIVE_WRITERS.get(sink.kind)
+    if write is None:
+        raise NotImplementedError(
+            f"sink {sink.kind!r} not implemented on the live "
+            f"pipeline (supported: {', '.join(LIVE_SINKS)})")
     _LIVE_MEMORY[task_id] = []
 
     def handle(batch_df: DataFrame, epoch_id: int) -> None:
@@ -255,26 +288,7 @@ def start_pipeline_live(env_stream: DataFrame, task_id: str,
         # sink — the live variant used to drop them on the floor,
         # losing malformed payloads exactly on the pipeline meant
         # for production filter updates
-        msgs = task_messages(projected, task_id)
-        if sink.kind == "kafka":
-            msgs.write.format("kafka").options(**sink.options).save()
-        elif sink.kind == "memory":
-            cap = int(sink.options.get("maxRows", 10_000))
-            buf = _LIVE_MEMORY[task_id]
-            batch = msgs.limit(cap + 1 - len(buf)).collect()
-            if len(buf) + len(batch) > cap:
-                raise RuntimeError(
-                    f"live memory sink exceeded maxRows={cap}; this "
-                    "sink is a test/debug surface — use the kafka or "
-                    "parquet sink for real volume")
-            buf.extend(batch)
-        elif sink.kind == "parquet":
-            msgs.write.mode("append").options(**sink.options).parquet(
-                sink.options["path"])
-        else:
-            raise NotImplementedError(
-                f"sink {sink.kind!r} not implemented (reference "
-                "parity: nsq/es/mongodb are stubs there too)")
+        write(task_messages(projected, task_id), sink, task_id)
 
     writer = env_stream.writeStream \
         .option("checkpointLocation", checkpoint_dir) \

@@ -13,9 +13,9 @@ aggregate as a pandas frame. The in-memory store here is the TEST
 TWIN (driver-resident dict — fine for bounded bucket counts, not
 for unbounded key spaces); the DEFAULT durable backend is
 ``state_store.ParquetRollupStore`` (bucketed executor-side parquet
-MERGE, replay-idempotent), and the epoch-keyed append-only variant
-(replay-safe partials, no refold) is
-``streaming.exactly_once.EpochKeyedRollupStore``.
+MERGE, replay-idempotent through the epoch key
+``state_store.start_store_stream`` scopes to the checkpoint
+lineage).
 """
 
 from __future__ import annotations

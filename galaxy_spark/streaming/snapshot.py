@@ -22,8 +22,9 @@ parquet MERGE, replay-idempotent, state never materialized on the
 driver); the Spark-4 tier is ``stateful.snapshot_maintenance``
 (transformWithStateInPandas, RocksDB state). n_changes makes the
 dict merge non-idempotent under epoch REPLAY, which is exactly the
-job of the epoch-keyed exactly-once wrapper
-(streaming/exactly_once.py) — same division of labor as the rollup.
+job of the durable store's (bucket, epoch) commit claims under the
+lineage-scoped key of ``state_store.start_store_stream`` — same
+division of labor as the rollup.
 """
 
 from __future__ import annotations

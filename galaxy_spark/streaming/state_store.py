@@ -40,8 +40,8 @@ Layout and protocol::
   remaining O(history) per-trigger cost).
 - A bucket's CURRENT state is its lexicographically-greatest
   committed version (epoch ids zero-padded; one checkpoint lineage
-  per store, enforced like exactly_once.py, since Spark restarts
-  epoch numbering per checkpoint).
+  per store, enforced by ``start_store_stream``'s guard, since
+  Spark restarts epoch numbering per checkpoint).
 - Commit per (bucket, epoch) goes through the commit-protocol seam
   (``store_fs.py``): the POSIX default is write to a staging dir ->
   fsync -> ``os.rename`` into place -> touch ``_COMMITTED``; the
@@ -52,10 +52,9 @@ Layout and protocol::
   already-applied buckets and skips them, while buckets the crash
   left unfinished recompute from their pre-epoch version — the
   non-idempotent parts of the fold (n_changes, sums) never
-  double-count. Same claim discipline as
-  ``exactly_once.EpochKeyedRollupStore``, applied to folded state
-  instead of per-epoch partials (reference replay-skip:
-  ``concurrently_task_manager.go:97-120``).
+  double-count. The claim key is (bucket, ``<lineage>.<epoch>``),
+  built in one place, ``start_store_stream`` (reference
+  replay-skip: ``concurrently_task_manager.go:97-120``).
 - Older versions of a bucket are vacuumed after its new commit; a
   crash mid-vacuum leaves extra old dirs that the max-version rule
   ignores and the next merge sweeps.
@@ -63,6 +62,7 @@ Layout and protocol::
 
 from __future__ import annotations
 
+import json
 import os
 import uuid
 
@@ -70,7 +70,6 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from galaxy_spark.streaming.exactly_once import _checkpoint_lineage
 from galaxy_spark.streaming.store_fs import PosixStoreFs, store_fs
 from galaxy_spark.streaming.rollup import _partial_rollup
 from galaxy_spark.streaming.snapshot import partial_snapshot
@@ -727,14 +726,22 @@ def rebucket(store: KeyedParquetStore, new_path: str,
     return new_store
 
 
+def _checkpoint_lineage(checkpoint_dir: str) -> str:
+    """The stable query id Spark writes to ``<ckpt>/metadata`` at
+    first start. Restarts from the same checkpoint keep it; a fresh
+    checkpoint mints a new one — exactly the scope of Spark's epoch
+    numbering, and so the scope our replay-skip key needs."""
+    with open(os.path.join(checkpoint_dir, "metadata")) as f:
+        return json.load(f)["id"][:8]
+
+
 def _require_lineage(checkpoint_dir: str, stores, cache: list) -> str:
     """Resolve and cache the checkpoint lineage, refusing any store
     that holds foreign-lineage state (epoch ids restart at 0 per
     checkpoint — continuing into a foreign-lineage store would drop
-    live batches as replays; same contract as
-    start_exactly_once_rollup). ONE copy of the guard for every
-    foreachBatch handler in this module, however many stores it
-    merges."""
+    live batches as replays: data loss masquerading as
+    exactly-once). ONE copy of the guard, run by
+    ``start_store_stream`` for every store a pipeline merges."""
     if not cache:
         lin = _checkpoint_lineage(checkpoint_dir)
         for store in stores:
@@ -748,19 +755,29 @@ def _require_lineage(checkpoint_dir: str, stores, cache: list) -> str:
     return cache[0]
 
 
-def _lineage_scoped_handler(store: KeyedParquetStore,
-                            checkpoint_dir: str, partial_fn):
-    """foreachBatch handler: distributed partial fold -> store
-    MERGE, with the epoch key scoped to the checkpoint lineage
-    (guard: ``_require_lineage``)."""
+def start_store_stream(stream: DataFrame, checkpoint_dir: str, stores,
+                       apply) -> StreamingQuery:
+    """The one foreachBatch tail of every store pipeline in this
+    module: ``apply(batch_df, key)`` merges a micro-batch into
+    ``stores`` under ``key = "<lineage>.<epoch_id:012d>"``. Spark
+    numbers epochs from 0 PER CHECKPOINT, so the epoch id is scoped
+    to the checkpoint lineage; every merge of one batch claims the
+    same key, so a replayed epoch finds its (bucket, key) commits
+    and skips them — the reference's replay-skip of anything at or
+    before the saved position (``concurrently_task_manager.go:97-120``).
+    The first batch runs the lineage guard (``_require_lineage``)
+    over ALL of ``stores``. Multi-store ``apply`` bodies document
+    their merge order: it is what makes a crash between two merges
+    replay to the same stores."""
     lineage: list[str] = []
 
     def handle(batch_df: DataFrame, epoch_id: int) -> None:
-        lin = _require_lineage(checkpoint_dir, (store,), lineage)
-        store.merge(partial_fn(batch_df),
-                    f"{lin}.{epoch_id:012d}")
+        lin = _require_lineage(checkpoint_dir, stores, lineage)
+        apply(batch_df, f"{lin}.{epoch_id:012d}")
 
-    return handle
+    return (stream.writeStream
+            .option("checkpointLocation", checkpoint_dir)
+            .foreachBatch(handle).start())
 
 
 def start_incremental_snapshot_parquet(
@@ -770,22 +787,18 @@ def start_incremental_snapshot_parquet(
     per-batch distributed latest-wins partial -> bucketed parquet
     MERGE. Result always equals the batch cdc_apply_snapshot fold
     (pinned in tests/test_streaming.py)."""
-    return (changes_stream.writeStream
-            .option("checkpointLocation", checkpoint_dir)
-            .foreachBatch(_lineage_scoped_handler(
-                store, checkpoint_dir, partial_snapshot))
-            .start())
+    return start_store_stream(
+        changes_stream, checkpoint_dir, (store,),
+        lambda b, key: store.merge(partial_snapshot(b), key))
 
 
 def start_incremental_rollup_parquet(
         stream: DataFrame, store: ParquetRollupStore,
         checkpoint_dir: str) -> StreamingQuery:
     """Default durable backend for the continuous rollup."""
-    return (stream.writeStream
-            .option("checkpointLocation", checkpoint_dir)
-            .foreachBatch(_lineage_scoped_handler(
-                store, checkpoint_dir, _partial_rollup))
-            .start())
+    return start_store_stream(
+        stream, checkpoint_dir, (store,),
+        lambda b, key: store.merge(_partial_rollup(b), key))
 
 
 def partial_scd2(changes: DataFrame) -> DataFrame:
@@ -847,11 +860,9 @@ def start_incremental_scd2_parquet(
         checkpoint_dir: str) -> StreamingQuery:
     """Maintain SCD2 history incrementally: per-batch distributed
     version-array partials -> bucketed parquet MERGE."""
-    return (changes_stream.writeStream
-            .option("checkpointLocation", checkpoint_dir)
-            .foreachBatch(_lineage_scoped_handler(
-                store, checkpoint_dir, partial_scd2))
-            .start())
+    return start_store_stream(
+        changes_stream, checkpoint_dir, (store,),
+        lambda b, key: store.merge(partial_scd2(b), key))
 
 
 class ParquetViewStore(KeyedParquetStore):
@@ -933,21 +944,15 @@ def start_incremental_view_parquet(
     order has a poisoned window — snapshot merged, view not — where
     a replay's deltas compute to zero against the already-advanced
     snapshot and the view silently loses the batch."""
-    lineage: list[str] = []
-
-    def handle(batch_df: DataFrame, epoch_id: int) -> None:
-        lin = _require_lineage(checkpoint_dir,
-                               (view_store, snap_store), lineage)
-        key = f"{lin}.{epoch_id:012d}"
+    def apply(batch_df: DataFrame, key: str) -> None:
         # merge() checkpoints its partial internally, so the
         # state-sized snapshot join here runs once per batch
         view_store.merge(partial_view_deltas(batch_df,
                                              snap_store.state()), key)
         snap_store.merge(partial_snapshot(batch_df), key)
 
-    return (changes_stream.writeStream
-            .option("checkpointLocation", checkpoint_dir)
-            .foreachBatch(handle).start())
+    return start_store_stream(changes_stream, checkpoint_dir,
+                              (view_store, snap_store), apply)
 
 
 # ------------------------------------------------------------------
@@ -1028,19 +1033,13 @@ def start_streaming_heavy_hitters(
     replay-correct in either order: after a crash between them the
     replay recomputes identical partials, the claimed store skips,
     the other completes."""
-    lineage: list[str] = []
-
-    def handle(batch_df: DataFrame, epoch_id: int) -> None:
-        lin = _require_lineage(checkpoint_dir,
-                               (cms_store, cand_store), lineage)
-        key = f"{lin}.{epoch_id:012d}"
+    def apply(batch_df: DataFrame, key: str) -> None:
         cms_store.merge(partial_cms(batch_df, key_col), key)
         cand_store.merge(partial_topk_candidates(batch_df, key_col,
                                                  m), key)
 
-    return (stream.writeStream
-            .option("checkpointLocation", checkpoint_dir)
-            .foreachBatch(handle).start())
+    return start_store_stream(stream, checkpoint_dir,
+                              (cms_store, cand_store), apply)
 
 
 def streaming_heavy_hitters(cms_store: ParquetCmsStore,
@@ -1118,16 +1117,9 @@ def start_streaming_cardinality(
     variant of the heavy-hitters starter (one merge per epoch, so
     replay correctness needs only the store's own claim skip; with
     MAX it would hold even without it)."""
-    lineage: list[str] = []
-
-    def handle(batch_df: DataFrame, epoch_id: int) -> None:
-        lin = _require_lineage(checkpoint_dir, (hll_store,), lineage)
-        hll_store.merge(partial_hll(batch_df, key_col),
-                        f"{lin}.{epoch_id:012d}")
-
-    return (stream.writeStream
-            .option("checkpointLocation", checkpoint_dir)
-            .foreachBatch(handle).start())
+    return start_store_stream(
+        stream, checkpoint_dir, (hll_store,),
+        lambda b, key: hll_store.merge(partial_hll(b, key_col), key))
 
 
 def streaming_cardinality_estimate(hll_store: ParquetHllStore) -> DataFrame:
@@ -1199,17 +1191,10 @@ def start_streaming_sliding_wau(
         checkpoint_dir: str, ts_col: str,
         key_col: str) -> StreamingQuery:
     """Maintain the per-day register store from one stream."""
-    lineage: list[str] = []
-
-    def handle(batch_df: DataFrame, epoch_id: int) -> None:
-        lin = _require_lineage(checkpoint_dir, (store,), lineage)
-        store.merge(partial_daily_hll(batch_df, ts_col, key_col,
-                                      store.p),
-                    f"{lin}.{epoch_id:012d}")
-
-    return (stream.writeStream
-            .option("checkpointLocation", checkpoint_dir)
-            .foreachBatch(handle).start())
+    return start_store_stream(
+        stream, checkpoint_dir, (store,),
+        lambda b, key: store.merge(
+            partial_daily_hll(b, ts_col, key_col, store.p), key))
 
 
 def streaming_sliding_wau(store: ParquetDailyHllStore,
@@ -1425,13 +1410,7 @@ def start_streaming_near_dup_index(
     union makes the probe indifferent to insert replay), then the
     index and corpus inserts; all three merges share the epoch key,
     so any crash window replays to exactly the same stores."""
-    lineage: list[str] = []
-
-    def handle(batch_df: DataFrame, epoch_id: int) -> None:
-        lin = _require_lineage(
-            checkpoint_dir, (lsh_store, doc_store, pair_store),
-            lineage)
-        key = f"{lin}.{epoch_id:012d}"
+    def apply(batch_df: DataFrame, key: str) -> None:
         # consumed three times (probe signatures, text attach,
         # inserts) — materialize the micro-batch once
         batch = batch_df.localCheckpoint()
@@ -1446,9 +1425,8 @@ def start_streaming_near_dup_index(
             batch.select(F.col(id_col).cast("long").alias("id"),
                          F.col(text_col).alias("text")), key)
 
-    return (stream.writeStream
-            .option("checkpointLocation", checkpoint_dir)
-            .foreachBatch(handle).start())
+    return start_store_stream(stream, checkpoint_dir,
+                              (lsh_store, doc_store, pair_store), apply)
 
 
 def streaming_near_dup_pairs(pair_store: ParquetPairStore) -> DataFrame:
@@ -1642,13 +1620,7 @@ def start_streaming_near_dup_clustering(
     and the root's lost redirect is never regenerated — a permanent
     cluster split. Same derivation-order discipline as the IVM
     starter's view-before-snapshot."""
-    lineage: list[str] = []
-
-    def handle(batch_df: DataFrame, epoch_id: int) -> None:
-        lin = _require_lineage(
-            checkpoint_dir, (lsh_store, doc_store, pair_store,
-                             cluster_store, redirect_store), lineage)
-        key = f"{lin}.{epoch_id:012d}"
+    def apply(batch_df: DataFrame, key: str) -> None:
         batch = batch_df.localCheckpoint()
         emitted = lsh_probe_pairs(batch, lsh_store, doc_store, n,
                                   n_hashes, bands, threshold,
@@ -1666,9 +1638,9 @@ def start_streaming_near_dup_clustering(
             batch.select(F.col(id_col).cast("long").alias("id"),
                          F.col(text_col).alias("text")), key)
 
-    return (stream.writeStream
-            .option("checkpointLocation", checkpoint_dir)
-            .foreachBatch(handle).start())
+    return start_store_stream(
+        stream, checkpoint_dir, (lsh_store, doc_store, pair_store,
+                                 cluster_store, redirect_store), apply)
 
 
 def streaming_cluster_assignments(
@@ -1893,13 +1865,7 @@ def start_streaming_emb_near_dup_index(
     """Probe-then-insert per micro-batch, embedding modality — same
     commutation story as the text starter (the probe's state-union
     makes all three same-epoch merges replay-order-free)."""
-    lineage: list[str] = []
-
-    def handle(batch_df: DataFrame, epoch_id: int) -> None:
-        lin = _require_lineage(
-            checkpoint_dir, (emb_store, vec_store, pair_store),
-            lineage)
-        key = f"{lin}.{epoch_id:012d}"
+    def apply(batch_df: DataFrame, key: str) -> None:
         batch = batch_df.localCheckpoint()
         pair_store.merge(
             emb_lsh_probe_pairs(batch, emb_store, vec_store,
@@ -1912,9 +1878,8 @@ def start_streaming_emb_near_dup_index(
             batch.select(F.col(id_col).cast("long").alias("id"),
                          F.col(vec_col).alias("vec")), key)
 
-    return (stream.writeStream
-            .option("checkpointLocation", checkpoint_dir)
-            .foreachBatch(handle).start())
+    return start_store_stream(stream, checkpoint_dir,
+                              (emb_store, vec_store, pair_store), apply)
 
 
 def streaming_emb_near_dup_pairs(
@@ -2094,18 +2059,11 @@ def start_streaming_winnowing_index(
     stream: ONE idempotent merge per micro-batch (the readers are
     derived views over the store — the rollup-hub shape, no
     separate emission store to drift)."""
-    lineage: list[str] = []
-
-    def handle(batch_df: DataFrame, epoch_id: int) -> None:
-        lin = _require_lineage(checkpoint_dir, (store,), lineage)
-        store.merge(
-            partial_winnow_index(batch_df, text_col, id_col,
-                                 df_cap=store.df_cap),
-            f"{lin}.{epoch_id:012d}")
-
-    return (stream.writeStream
-            .option("checkpointLocation", checkpoint_dir)
-            .foreachBatch(handle).start())
+    return start_store_stream(
+        stream, checkpoint_dir, (store,),
+        lambda b, key: store.merge(
+            partial_winnow_index(b, text_col, id_col,
+                                 df_cap=store.df_cap), key))
 
 
 # ------------------------------------------------------------------
@@ -2486,21 +2444,15 @@ def start_streaming_item_cf(stream: DataFrame,
     monoids, claim-protected) run BEFORE the basket insert, so a
     crash anywhere in the window replays against the same
     pre-insert basket state and recomputes identical deltas."""
-    lineage: list[str] = []
-
-    def handle(batch_df: DataFrame, epoch_id: int) -> None:
-        lin = _require_lineage(
-            checkpoint_dir, (basket_store, cooc_store, deg_store),
-            lineage)
-        key = f"{lin}.{epoch_id:012d}"
+    def apply(batch_df: DataFrame, key: str) -> None:
         pair_d, deg_d, baskets = cooc_deltas(batch_df, basket_store)
         cooc_store.merge(pair_d, key)
         deg_store.merge(deg_d, key)
         basket_store.merge(baskets, key)       # insert LAST
 
-    return (stream.writeStream
-            .option("checkpointLocation", checkpoint_dir)
-            .foreachBatch(handle).start())
+    return start_store_stream(stream, checkpoint_dir,
+                              (basket_store, cooc_store, deg_store),
+                              apply)
 
 
 def streaming_item_cf_topk(cooc_store: ParquetCoocStore,
@@ -2709,17 +2661,10 @@ def start_streaming_kmv(stream: DataFrame, store: ParquetKmvStore,
                         checkpoint_dir: str, side_col: str,
                         key_col: str) -> StreamingQuery:
     """Maintain per-side KMV sketches from one stream."""
-    lineage: list[str] = []
-
-    def handle(batch_df: DataFrame, epoch_id: int) -> None:
-        lin = _require_lineage(checkpoint_dir, (store,), lineage)
-        store.merge(partial_kmv(batch_df, side_col, key_col,
-                                store.k),
-                    f"{lin}.{epoch_id:012d}")
-
-    return (stream.writeStream
-            .option("checkpointLocation", checkpoint_dir)
-            .foreachBatch(handle).start())
+    return start_store_stream(
+        stream, checkpoint_dir, (store,),
+        lambda b, key: store.merge(
+            partial_kmv(b, side_col, key_col, store.k), key))
 
 
 def streaming_kmv_sketch(store: ParquetKmvStore) -> DataFrame:
@@ -2827,13 +2772,10 @@ def start_streaming_ols(stream: DataFrame, store: ParquetOlsStore,
     batch queries' ``_ols_stats`` wraps)."""
     from galaxy_spark.queries.ml import ols_partial_stats
 
-    return (stream.writeStream
-            .option("checkpointLocation", checkpoint_dir)
-            .foreachBatch(_lineage_scoped_handler(
-                store, checkpoint_dir,
-                lambda df: ols_partial_stats(df, key,
-                                             store.key_col)))
-            .start())
+    return start_store_stream(
+        stream, checkpoint_dir, (store,),
+        lambda b, k: store.merge(
+            ols_partial_stats(b, key, store.key_col), k))
 
 
 def streaming_ols_estimates(store: ParquetOlsStore) -> DataFrame:
@@ -2980,13 +2922,10 @@ def start_streaming_sessions(stream: DataFrame,
     """Maintain gap-merged sessions from an events-shaped stream;
     the partial shape follows the STORE's retention knob, so the
     two cannot disagree."""
-    return (stream.writeStream
-            .option("checkpointLocation", checkpoint_dir)
-            .foreachBatch(_lineage_scoped_handler(
-                store, checkpoint_dir,
-                lambda b: partial_sessions(
-                    b, store.retention_days)))
-            .start())
+    return start_store_stream(
+        stream, checkpoint_dir, (store,),
+        lambda b, key: store.merge(
+            partial_sessions(b, store.retention_days), key))
 
 
 def streaming_session_rows(store: ParquetSessionStore) -> DataFrame:
@@ -3104,12 +3043,7 @@ def start_streaming_search_index(
     postings, doc lengths and the O(1) corpus statistics, all under
     one shared epoch key so crash windows replay to the same
     stores."""
-    lineage: list[str] = []
-
-    def handle(batch_df: DataFrame, epoch_id: int) -> None:
-        lin = _require_lineage(checkpoint_dir,
-                               (postings, doclen, stats), lineage)
-        key = f"{lin}.{epoch_id:012d}"
+    def apply(batch_df: DataFrame, key: str) -> None:
         batch = batch_df.localCheckpoint()   # consumed twice
         dls = partial_doc_stats(batch, text_col, id_col) \
             .localCheckpoint(eager=False)    # feeds doclen AND stats
@@ -3129,9 +3063,8 @@ def start_streaming_search_index(
         postings.merge(partial_postings(batch, text_col, id_col),
                        key)
 
-    return (stream.writeStream
-            .option("checkpointLocation", checkpoint_dir)
-            .foreachBatch(handle).start())
+    return start_store_stream(stream, checkpoint_dir,
+                              (postings, doclen, stats), apply)
 
 
 def streaming_inverted_index(
@@ -3285,13 +3218,10 @@ def start_streaming_user_days(stream: DataFrame,
                               checkpoint_dir: str) -> StreamingQuery:
     """Maintain per-(user, day) counts from an events stream; the
     partial shape follows the STORE's retention knob."""
-    return (stream.writeStream
-            .option("checkpointLocation", checkpoint_dir)
-            .foreachBatch(_lineage_scoped_handler(
-                store, checkpoint_dir,
-                lambda b: partial_user_days(
-                    b, store.retention_days)))
-            .start())
+    return start_store_stream(
+        stream, checkpoint_dir, (store,),
+        lambda b, key: store.merge(
+            partial_user_days(b, store.retention_days), key))
 
 
 def streaming_decay_scores(store: ParquetUserDayStore) -> DataFrame:
@@ -3355,11 +3285,9 @@ def start_streaming_order_facts(
         checkpoint_dir: str) -> StreamingQuery:
     """Maintain the per-customer order timeline from an
     orders-shaped stream."""
-    return (stream.writeStream
-            .option("checkpointLocation", checkpoint_dir)
-            .foreachBatch(_lineage_scoped_handler(
-                store, checkpoint_dir, partial_order_facts))
-            .start())
+    return start_store_stream(
+        stream, checkpoint_dir, (store,),
+        lambda b, key: store.merge(partial_order_facts(b), key))
 
 
 def streaming_order_cadence(store: ParquetOrderFactStore,
@@ -3506,13 +3434,10 @@ def start_streaming_event_index(stream: DataFrame,
     """Maintain the per-(user, type) event-time index; the partial
     shape follows the STORE's retention knob, so the two cannot
     disagree."""
-    return (stream.writeStream
-            .option("checkpointLocation", checkpoint_dir)
-            .foreachBatch(_lineage_scoped_handler(
-                store, checkpoint_dir,
-                lambda b: partial_event_index(
-                    b, store.retention_days)))
-            .start())
+    return start_store_stream(
+        stream, checkpoint_dir, (store,),
+        lambda b, key: store.merge(
+            partial_event_index(b, store.retention_days), key))
 
 
 def streaming_funnel(store: ParquetEventIndexStore) -> DataFrame:
@@ -3628,20 +3553,14 @@ def start_streaming_attribution_hub(
     ride in the index the funnel/retention readers already use).
     Both merges are idempotent set-unions, so replay order across
     the two stores cannot matter."""
-    lineage: list[str] = []
-
-    def handle(batch_df: DataFrame, epoch_id: int) -> None:
-        lin = _require_lineage(
-            checkpoint_dir, (purchase_store, index_store), lineage)
-        key = f"{lin}.{epoch_id:012d}"
+    def apply(batch_df: DataFrame, key: str) -> None:
         purchase_store.merge(partial_purchases(batch_df), key)
         index_store.merge(
             partial_event_index(batch_df,
                                 index_store.retention_days), key)
 
-    return (stream.writeStream
-            .option("checkpointLocation", checkpoint_dir)
-            .foreachBatch(handle).start())
+    return start_store_stream(stream, checkpoint_dir,
+                              (purchase_store, index_store), apply)
 
 
 def streaming_attribution_last_touch(
@@ -3723,11 +3642,9 @@ def start_streaming_customer_orders(
         checkpoint_dir: str) -> StreamingQuery:
     """Maintain the per-customer order rollup from an
     orders-shaped stream."""
-    return (stream.writeStream
-            .option("checkpointLocation", checkpoint_dir)
-            .foreachBatch(_lineage_scoped_handler(
-                store, checkpoint_dir, partial_customer_orders))
-            .start())
+    return start_store_stream(
+        stream, checkpoint_dir, (store,),
+        lambda b, key: store.merge(partial_customer_orders(b), key))
 
 
 def streaming_rfm_segments(store: ParquetCustomerOrderStore
@@ -3890,17 +3807,10 @@ def start_streaming_user_seq(stream: DataFrame,
     """Maintain the per-user typed event timeline; the partial
     shape follows the STORE's retention knob, so the two cannot
     disagree."""
-    lineage: list[str] = []
-
-    def handle(batch_df: DataFrame, epoch_id: int) -> None:
-        lin = _require_lineage(checkpoint_dir, (store,), lineage)
-        store.merge(partial_user_seq(batch_df,
-                                     store.retention_days),
-                    f"{lin}.{epoch_id:012d}")
-
-    return (stream.writeStream
-            .option("checkpointLocation", checkpoint_dir)
-            .foreachBatch(handle).start())
+    return start_store_stream(
+        stream, checkpoint_dir, (store,),
+        lambda b, key: store.merge(
+            partial_user_seq(b, store.retention_days), key))
 
 
 def streaming_path_trigrams(store: ParquetUserSeqStore

@@ -490,26 +490,26 @@ def test_stateful_task_store_write_strategies(spark, tmp_path):
                       lambda s, spec: None)
 
     nd = TaskSpec(task_id="nd", task_kind="near_dup_index")
-    assert [s.delta_threshold for s in mgr.near_dup_stores(nd)] == \
+    assert [s.delta_threshold for s in mgr.stores(nd)] == \
         [8, 8, 8, None, None]
     si = TaskSpec(task_id="si", task_kind="search_index")
-    assert [s.delta_threshold for s in mgr.search_stores(si)] == \
+    assert [s.delta_threshold for s in mgr.stores(si)] == \
         [8, 8, None]
     # explicit null -> CoW everywhere; explicit int -> uniform
     cow = TaskSpec(task_id="c", task_kind="search_index",
                    index_options={"delta_threshold": None})
-    assert [s.delta_threshold for s in mgr.search_stores(cow)] == \
+    assert [s.delta_threshold for s in mgr.stores(cow)] == \
         [None, None, None]
     four = TaskSpec(task_id="f", task_kind="near_dup_index",
                     index_options={"delta_threshold": 4})
-    assert [s.delta_threshold for s in mgr.near_dup_stores(four)] == \
+    assert [s.delta_threshold for s in mgr.stores(four)] == \
         [4, 4, 4, 4, 4]
     # float with integral value is accepted (JSON round-trip), but
     # 8.9 must NOT silently truncate to 8, and junk must name the
     # option
     ok = TaskSpec(task_id="k", task_kind="search_index",
                   index_options={"delta_threshold": 4.0})
-    assert mgr.search_stores(ok)[0].delta_threshold == 4
+    assert mgr.stores(ok)[0].delta_threshold == 4
     for bad in (8.9, "8", True, 0, -2, "many"):
         with _pytest.raises(ValueError,
                             match=r"delta_threshold"):
@@ -527,12 +527,12 @@ def test_stateful_task_store_write_strategies(spark, tmp_path):
     man = TaskSpec(task_id="m", task_kind="near_dup_index",
                    index_options={"fs": "manifest"})
     assert all(type(s.fs) is ManifestStoreFs
-               for s in mgr.near_dup_stores(man))
+               for s in mgr.stores(man))
     cas = TaskSpec(task_id="cs", task_kind="rollup",
                    index_options={"fs": "manifest_cas"})
-    assert type(mgr.rollup_store(cas).fs) is CasManifestStoreFs
+    assert type(mgr.stores(cas)[0].fs) is CasManifestStoreFs
     assert all(type(s.fs) is PosixStoreFs
-               for s in mgr.search_stores(si))    # default
+               for s in mgr.stores(si))    # default
     with _pytest.raises(ValueError, match=r"\['fs'\]"):
         mgr.create_task(TaskSpec(
             task_id="bad", task_kind="rollup",
@@ -912,7 +912,7 @@ def test_item_cf_task_lifecycle(spark, tmp_path):
     mgr2.create_task(spec)
     mgr2.await_all()
     mgr2.stop_task("cf_ret")
-    b, c, d = mgr2.item_cf_stores("cf_ret")
+    b, c, d = mgr2.stores("cf_ret")
     assert b.retention_days == 90
     assert "t date" in (b.state_schema or "")
     mgr2.delete_task("cf_ret")
@@ -929,7 +929,7 @@ def test_item_cf_task_lifecycle(spark, tmp_path):
     mgr2.create_task(spec)
     mgr2.await_all()
     mgr2.stop_task("cf_cap")
-    b, c, d = mgr2.item_cf_stores("cf_cap")
+    b, c, d = mgr2.stores("cf_cap")
     assert b.basket_cap == 50
     mgr2.delete_task("cf_cap")
 
@@ -1013,7 +1013,7 @@ def test_event_index_task_lifecycle(spark, tmp_path):
     mgr2.create_task(spec)
     mgr2.await_all()
     mgr2.stop_task("ei_ret")
-    pur, idx = mgr2.event_index_stores("ei_ret")
+    pur, idx = mgr2.stores("ei_ret")
     assert idx.retention_days == 30 and "wm" in idx.state_schema
     assert "retention" not in repr(pur.state_schema)
     mgr2.delete_task("ei_ret")
@@ -1093,7 +1093,85 @@ def test_user_seq_task_lifecycle(spark, tmp_path):
     mgr2.create_task(spec)
     mgr2.await_all()
     mgr2.stop_task("us_ret")
-    store = mgr2.user_seq_store("us_ret")
+    (store,) = mgr2.stores("us_ret")
     assert store.retention_days == 30 \
         and "wm" in store.state_schema
     mgr2.delete_task("us_ret")
+
+
+@pytest.mark.parametrize("kind, want", [
+    ("near_dup_index", [("lsh", "ParquetLshStore", 8),
+                        ("doc", "ParquetDocStore", 8),
+                        ("pair", "ParquetPairStore", 8),
+                        ("cluster", "ParquetClusterStore", None),
+                        ("redirect", "ParquetRedirectStore", None)]),
+    ("search_index", [("postings", "ParquetPostingsStore", 8),
+                      ("doclen", "ParquetDocLenStore", 8),
+                      ("stats", "ParquetCorpusStatsStore", None)]),
+    ("rollup", [("rollup", "ParquetRollupStore", 8)]),
+    ("winnow_index", [("winnow", "ParquetWinnowStore", 8)]),
+    ("item_cf", [("basket", "ParquetBasketStore", 8),
+                 ("cooc", "ParquetCoocStore", 8),
+                 ("deg", "ParquetItemDegStore", None)]),
+    ("event_index", [("purchase", "ParquetPurchaseStore", 8),
+                     ("evindex", "ParquetEventIndexStore", 8)]),
+    ("user_seq", [("userseq", "ParquetUserSeqStore", 8)]),
+])
+def test_stateful_kind_stores_pinned(spark, tmp_path, kind, want):
+    """Every stateful kind's on-disk store layout and default write
+    strategy: sub-directory under the task's store root, store
+    class, and delta_threshold (8 = delta tier for corpus-sized
+    stores, None = CoW for hot ones). A changed row would orphan
+    the state of every deployed task of that kind."""
+    from galaxy_spark.control.tasks import TaskSpec
+
+    mgr = TaskManager(spark, str(tmp_path / "kp_state"),
+                      lambda s, spec: None)
+    spec = TaskSpec(task_id="kp", task_kind=kind)
+    root = mgr.store_root(spec)
+    assert [(os.path.relpath(s.path, root), type(s).__name__,
+             s.delta_threshold) for s in mgr.stores(spec)] == want
+
+
+def test_failed_start_leaves_no_ghost_task(spark, events_dir, tmp_path):
+    """A spec whose start raises (here an unimplemented sink) is
+    never persisted, so it must not stay registered either: a ghost
+    id was listed by status() and refused a corrected retry as
+    'already exists (stopped)'."""
+    from galaxy_spark.control.tasks import TaskSpec
+
+    mgr = TaskManager(spark, str(tmp_path / "gh_state"),
+                      _source_factory(events_dir))
+    cols = tuple(EVENT_SOURCE_COLUMNS)
+    with pytest.raises(NotImplementedError, match="nsq"):
+        mgr.create_task(TaskSpec(task_id="ghost_t", columns=cols,
+                                 sink_kind="nsq"))
+    assert mgr.tasks == {} and mgr.status() == {}
+    mgr.create_task(TaskSpec(task_id="ghost_t", columns=cols,
+                             sink_kind="parquet", sink_options={
+                                 "path": str(tmp_path / "ghost_out")}))
+    try:
+        mgr.await_all()
+        assert mgr.status()["ghost_t"]["active"]
+    finally:
+        mgr.stop_task("ghost_t")
+
+
+def test_live_task_rejects_sinks_the_live_path_cannot_write(
+        spark, events_dir, tmp_path):
+    """The live pipeline writes each batch itself and has writers
+    for kafka, memory and parquet only. Any other sink (the
+    broker-less topic_files sink, an unknown kind) used to be
+    accepted and then kill the task at its first micro-batch; it is
+    refused at creation, naming the sinks the live path supports."""
+    from galaxy_spark.control.tasks import TaskSpec
+
+    mgr = TaskManager(spark, str(tmp_path / "ls_state"),
+                      _source_factory(events_dir))
+    for sink in ("topic_files", "nsq"):
+        with pytest.raises(ValueError,
+                           match="'kafka', 'memory', 'parquet'"):
+            mgr.create_task(TaskSpec(
+                task_id="live_s", columns=tuple(EVENT_SOURCE_COLUMNS),
+                sink_kind=sink, live=True))
+    assert mgr.tasks == {} and mgr.queries == {}

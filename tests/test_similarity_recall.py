@@ -120,6 +120,38 @@ def test_lsh_near_dup_recall(spark):
     assert len(lsh & exact) / max(len(exact), 1) >= 0.5
 
 
+def test_lsh_prescore_is_float64_on_float32_embeddings(spark):
+    """The verify's vectorized prescore drops pairs below
+    ``threshold - 1e-6`` before the exact fold. Embeddings are
+    ``array<float>``, and a float32 dot product swamps every term
+    below half an ulp of its running sum: here a near-parallel pair
+    whose 2,016-term tail vanishes behind 32 unit terms drifts about
+    3.7e-6 below its exact cosine, past the margin, so a float32
+    prescore pruned a pair the exact fold keeps. The pruned output
+    must equal the exact all-pairs fold."""
+    import numpy as np
+
+    from galaxy_spark.operators.dedup import embedding_near_dup
+
+    dim, n_big = 2048, 32
+    # tail * tail is 0.49 ulp(1.0): absorbed by any float32
+    # accumulator already holding a unit term
+    tail = float(np.float32(np.sqrt(0.49 * 2.0 ** -23)))
+    dup = [1.0] * n_big + [tail] * (dim - n_big)
+    other = np.random.default_rng(7).standard_normal(dim) \
+        .astype(np.float32).tolist()
+    emb = spark.createDataFrame([(1, dup), (2, dup), (3, other)],
+                                "vec_id long, embedding array<float>")
+    threshold = 1.0 - 1e-7
+    exact = {(r.id_a, r.id_b)
+             for r in embedding_near_dup(emb, threshold).collect()}
+    got = {(r.id_a, r.id_b)
+           for r in similarity.lsh_near_dup_pairs(
+               emb, threshold, dim=dim).collect()}
+    assert exact == {(1, 2)}
+    assert got == exact
+
+
 def test_jaccard_df_cutoff_exact_on_survivors(spark):
     """The max_df skew guard must (a) never invent pairs, (b) keep
     EXACT jaccard/n_shared for every surviving pair (verification

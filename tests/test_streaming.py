@@ -478,120 +478,34 @@ def test_incremental_rollup_matches_batch(spark, events_dir, tmp_path):
     assert store.snapshot() == exp
 
 
-def test_exactly_once_rollup_survives_epoch_replay(spark, events_dir,
-                                                   tmp_path):
-    """foreachBatch is at-least-once: force Spark to REPLAY the last
-    epoch (drop its commit marker, restart from the same checkpoint)
-    and prove the epoch-keyed store does not double-count — the
-    replay-skip guarantee the reference gets from its saved-position
-    check (concurrently_task_manager.go:97-120)."""
-    import os
-
-    from galaxy_spark.streaming.exactly_once import (
-        EpochKeyedRollupStore,
-        start_exactly_once_rollup,
-    )
-
-    ckpt = str(tmp_path / "eo_ckpt")
-    store = EpochKeyedRollupStore(str(tmp_path / "eo_store"))
-    q = start_exactly_once_rollup(_stream_events(spark, events_dir),
-                                  store, ckpt)
-    q.processAllAvailable()
-    q.stop()
-    q.awaitTermination(30)
-    first = store.snapshot()
-    epochs = store.epochs()
-    assert first and epochs
-
-    # simulate the crash window: sink write landed, checkpoint commit
-    # didn't -> on restart Spark re-runs the batch with the SAME epoch.
-    # Hadoop's local FS keeps a .<name>.crc checksum sidecar next to
-    # each commit marker; a real crash loses both, and leaving the
-    # sidecar makes the replayed commit's rename die with
-    # FileAlreadyExistsException — so remove the pair.
-    commits_dir = os.path.join(ckpt, "commits")
-    last = [c for c in sorted(os.listdir(commits_dir))
-            if not c.startswith(".")][-1]
-    os.remove(os.path.join(commits_dir, last))
-    crc = os.path.join(commits_dir, f".{last}.crc")
-    if os.path.exists(crc):
-        os.remove(crc)
-
-    q2 = start_exactly_once_rollup(_stream_events(spark, events_dir),
-                                   store, ckpt)
-    q2.processAllAvailable()
-    q2.stop()
-    q2.awaitTermination(30)
-
-    assert store.epochs() == epochs, "replay must not mint new epochs"
-    assert store.snapshot() == first, "replayed epoch double-counted"
-
-    # direct idempotence: merging the same epoch twice is a no-op
-    import pandas as pd
-    pdf = pd.DataFrame({"grain": ["hour"], "bucket_start": [None],
-                        "event_type": ["x"], "n_events": [1],
-                        "total_value": [1.0]})
-    fresh = EpochKeyedRollupStore(str(tmp_path / "eo_store2"))
-    assert fresh.merge(pdf, 0) is True
-    assert fresh.merge(pdf, 0) is False
-    assert fresh.snapshot()[0][3] == 1
-
-
-def test_exactly_once_store_rejects_foreign_lineage(spark, events_dir,
-                                                    tmp_path):
+def test_parquet_rollup_store_rejects_foreign_lineage(spark, events_dir,
+                                                      tmp_path):
     """Spark epoch ids restart at 0 per checkpoint, so pointing a
     FRESH checkpoint at a used store would silently drop live
-    batches as 'replays'. The sink must fail loudly instead."""
+    batches as 'replays'. The durable store's stream must fail
+    loudly instead, and leave the store's state untouched."""
     import pytest
     from pyspark.errors.exceptions.captured import StreamingQueryException
 
-    from galaxy_spark.streaming.exactly_once import (
-        EpochKeyedRollupStore,
-        start_exactly_once_rollup,
-    )
+    from galaxy_spark.streaming.state_store import (
+        ParquetRollupStore, start_incremental_rollup_parquet)
 
-    store = EpochKeyedRollupStore(str(tmp_path / "eo_store"))
-    q = start_exactly_once_rollup(_stream_events(spark, events_dir),
-                                  store, str(tmp_path / "ckpt_a"))
+    store = ParquetRollupStore(spark, str(tmp_path / "pr_store"))
+    q = start_incremental_rollup_parquet(
+        _stream_events(spark, events_dir), store, str(tmp_path / "ckpt_a"))
     q.processAllAvailable()
     q.stop()
     q.awaitTermination(30)
-    assert store.epochs()
+    assert store.lineages()
+    before = store.snapshot()
 
-    q2 = start_exactly_once_rollup(_stream_events(spark, events_dir),
-                                   store, str(tmp_path / "ckpt_b"))
+    q2 = start_incremental_rollup_parquet(
+        _stream_events(spark, events_dir), store, str(tmp_path / "ckpt_b"))
     with pytest.raises(StreamingQueryException, match="lineage"):
         q2.processAllAvailable()
         q2.awaitTermination(30)
     q2.stop()
-
-
-def test_exactly_once_store_sweeps_orphan_tmp_dirs(tmp_path):
-    """A crash between the tmp write and the claiming rename leaves
-    an unclaimed *.tmp-* dir; construction (= restart) sweeps it and
-    the epoch stays claimable."""
-    import os
-
-    import pandas as pd
-
-    from galaxy_spark.streaming.exactly_once import EpochKeyedRollupStore
-
-    path = str(tmp_path / "eo_store")
-    orphan = os.path.join(path, "epoch=0.tmp-deadbeef")
-    os.makedirs(orphan)
-    with open(os.path.join(orphan, "part-0.parquet"), "wb") as f:
-        f.write(b"torn")
-
-    store = EpochKeyedRollupStore(path)
-    assert not os.path.exists(orphan)
-    assert store.epochs() == []
-
-    pdf = pd.DataFrame({"grain": ["hour"], "bucket_start": [None],
-                        "event_type": ["x"], "n_events": [1],
-                        "total_value": [1.0]})
-    assert store.merge(pdf, 0, lineage="aaaa0000") is True
-    assert store.merge(pdf, 0, lineage="aaaa0000") is False
-    assert store.lineages() == {"aaaa0000"}
+    assert store.snapshot() == before
 
 
 def test_live_filter_update_no_restart(spark, tmp_path):
@@ -1108,8 +1022,8 @@ def test_parquet_rollup_store_survives_spark_epoch_replay(
     drop the last checkpoint commit marker, restart, and the
     bucketed MERGE must recognize its committed (bucket, epoch)
     versions and skip the replayed batch — totals unchanged, no new
-    version dirs minted (the state_store twin of the
-    EpochKeyedRollupStore replay test)."""
+    version dirs minted (the replay-skip the reference gets from its
+    saved-position check, concurrently_task_manager.go:97-120)."""
     from galaxy_spark.streaming.state_store import (
         ParquetRollupStore, start_incremental_rollup_parquet)
 
@@ -1126,6 +1040,12 @@ def test_parquet_rollup_store_survives_spark_epoch_replay(
                 if d.startswith("bucket-")}
     assert first and versions
 
+    # simulate the crash window: sink write landed, checkpoint commit
+    # didn't -> on restart Spark re-runs the batch with the SAME epoch.
+    # Hadoop's local FS keeps a .<name>.crc checksum sidecar next to
+    # each commit marker; a real crash loses both, and leaving the
+    # sidecar makes the replayed commit's rename die with
+    # FileAlreadyExistsException — so remove the pair.
     commits_dir = os.path.join(ckpt, "commits")
     last = [c for c in sorted(os.listdir(commits_dir))
             if not c.startswith(".")][-1]
@@ -1824,36 +1744,6 @@ def test_ddl_apply_batch_persists_registry(spark, tmp_path):
     reloaded = SchemaRegistry.load(save)
     assert [c.name for c in reloaded.get("db0", "t").columns] \
         == ["id", "v", "c"]
-
-
-def test_store_rename_failure_raises_not_skips(tmp_path, monkeypatch):
-    """A commit-rename failure that is NOT a lost replay race must
-    RAISE (so Spark retries the batch) — swallowing it as a replay
-    skip silently dropped a live epoch's contribution while the
-    checkpoint advanced."""
-    import pandas as pd
-
-    from galaxy_spark.streaming.exactly_once import EpochKeyedRollupStore
-
-    store = EpochKeyedRollupStore(str(tmp_path / "eo"))
-    pdf = pd.DataFrame({"grain": ["day"], "bucket_start": ["2024-01-01"],
-                        "event_type": ["click"], "n_events": [1],
-                        "total_value": [1.0]})
-
-    real_rename = os.rename
-
-    def failing_rename(src, dst):
-        raise OSError("injected: no space left on device")
-
-    monkeypatch.setattr(os, "rename", failing_rename)
-    with pytest.raises(OSError, match="injected"):
-        store.merge(pdf, epoch_id=1, lineage="lin")
-    monkeypatch.setattr(os, "rename", real_rename)
-
-    # genuine lost race (dest exists) still reports a replay skip
-    assert store.merge(pdf, epoch_id=2, lineage="lin") is True
-    monkeypatch.setattr(os, "rename", failing_rename)
-    assert store.merge(pdf, epoch_id=2, lineage="lin") is False
 
 
 def test_live_pipeline_routes_quarantined_to_dlq(spark, tmp_path):
